@@ -13,9 +13,10 @@ clustering), re-expressed Spark-first:
   *across all turns in a batch* (zero Spark-level per-row Python) and its
   output is assembled as Arrow arrays straight from segmentation offsets;
 - cross-turn state (link reference registry) is aggregated from the tiny
-  link_dests column of the cached kernel output and broadcast-joined
-  back, so no payload is decoded twice and the heavy char data never
-  shuffles (the salted repartition engages only for clustered sources).
+  link_dests column of the cached kernel output into one per-turn side
+  table and broadcast-joined back once, so no payload is decoded twice
+  and the heavy char data never shuffles (the salted repartition engages
+  only for clustered sources).
 
 Reference semantics are documented per-operator in SURVEY.md §2 with
 `file:line` citations into /root/reference.

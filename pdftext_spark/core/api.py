@@ -73,12 +73,19 @@ def _arrow_text_view(texts):
     decode of the whole batch and orjson's internal str→UTF-8 re-encode
     (~45% of the scan-and-parse cost on a payload corpus). str_at(i)
     decodes a single row on demand for the HTML/prose minority paths;
-    it produces exactly `to_pylist()[i]` (same UTF-8 decode)."""
+    it produces exactly `to_pylist()[i]` (same UTF-8 decode). Any type
+    but string/large_string raises TypeError."""
     import pyarrow as pa
 
     if isinstance(texts, pa.ChunkedArray):
         texts = texts.combine_chunks()
-    if texts.type == pa.large_string():
+    # the buffer walk below knows only the offsets+data layout; any other
+    # encoding (string_view, dictionary, ...) would be misread silently
+    if not (pa.types.is_string(texts.type)
+            or pa.types.is_large_string(texts.type)):
+        raise TypeError(
+            f"expected a string or large_string array, got {texts.type}")
+    if pa.types.is_large_string(texts.type):
         odtype, owidth = np.int64, 8
     else:
         odtype, owidth = np.int32, 4

@@ -11,10 +11,11 @@ Internal-link urls depend on the per-conversation reference registry
 (X1, schema.py:205-225) — a CROSS-TURN dependency. Split boundaries do
 not: two links produce the same url iff they dedup to the same
 (dest_page, dest_pos). So the kernel emits a deterministic placeholder
-url `#goto|<dest_page>|<x>|<y>` with identical equality semantics; the
+url `#goto|<turn_idx>|<gid>` with identical equality semantics; the
 Spark layer resolves placeholders to final `#page-<page>-<idx>` urls with
-a tiny per-conversation aggregation + broadcast join (operators/refs.py),
-keeping the heavy char data out of that shuffle.
+one aggregation per (conversation, dest page), one per-turn side table and
+one broadcast join (operators/refs.py), keeping the heavy char data out of
+every shuffle.
 """
 
 from __future__ import annotations
@@ -39,8 +40,9 @@ def goto_placeholder(turn_idx: int, gid: int) -> str:
     `gid` is the per-turn dedup id over distinct (dest_page, dest_pos)
     values, so placeholder equality within a turn is exactly final-url
     equality (split boundaries, links.py:203, depend only on that), while
-    the string itself is integer-only — reproducible bit-for-bit by JVM
-    `concat` in operators/refs.py, with no float-formatting hazards.
+    the string itself is integer-only — reproducible bit-for-bit by the
+    SQL `concat` that builds the url map in operators/refs.py, with no
+    float-formatting hazards.
     """
     return f"#goto|{turn_idx}|{gid}"
 
@@ -185,9 +187,11 @@ def resolve_conversation_refs(turn_registrations: list[tuple]) -> tuple[dict, di
     distinct coords of that dest page. Returns (placeholder→final-url
     map, dest_page→[ref dict]).
 
-    The Spark-side aggregation in operators/refs.py orders by
-    (turn_idx, ord) — identical whenever processing order is turn order,
-    which it always is for a table (there is no other order).
+    operators/refs.py sorts each (conversation, dest_page) group's
+    registrations by (turn_idx, ord) and takes `array_distinct` of their
+    coords — identical whenever processing order is turn order, which it
+    always is for a table (there is no other order). Its struct
+    comparison treats -0.0 and 0.0 as one coord, as `==` does here.
     """
     url_map: dict[str, str] = {}
     refs_by_page: dict[int, list[dict]] = {}

@@ -14,8 +14,8 @@ Scale notes (the parts that must survive 1000 executors / 100 TB):
 - **One heavy shuffle total.** The X1 reference registry (the only
   cross-turn operator, SURVEY.md §2.9) is resolved on a projected
   side-table of link registrations — a few bytes per linked turn — and
-  joined back with broadcast joins; the char payloads never shuffle again
-  (operators/refs.py).
+  joined back with one broadcast join; the char payloads never shuffle
+  again (operators/refs.py).
 - **Python boundary**: exactly one Arrow round-trip for the kernel (the
   default links_via="persist" caches it); url/ref rewriting is a pure
   JVM-side columnar projection over the cache.
@@ -174,10 +174,12 @@ def extract(transcripts: DataFrame, cfg: ExtractConfig = ExtractConfig(),
     broadcast_threshold passes through to refs.resolve_refs: the default
     gate counts link registrations EAGERLY at call time (one Spark job;
     in persist mode it also materializes the kernel cache the first
-    consumer would have paid for anyway). Pass None for a fully lazy
-    plan with unconditionally hinted broadcasts — appropriate when
-    composing plans for explain()/inspection or when the corpus is known
-    not to be link-dense."""
+    consumer would have paid for anyway). At or below the threshold the
+    one per-turn refs side table is broadcast-hinted; above it the same
+    join runs unhinted and AQE picks broadcast or sort-merge. Pass None
+    for a fully lazy plan with an unconditionally hinted broadcast —
+    appropriate when composing plans for explain()/inspection or when
+    the corpus is known not to be link-dense."""
     spark = transcripts.sparkSession
     # Catalyst cannot prune columns INTO the Python kernel, so project the
     # kernel's contract explicitly — extra input columns (e.g. `tool`)

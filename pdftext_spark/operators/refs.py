@@ -4,85 +4,110 @@ The reference keeps a PageReference registry that grows across the pages
 of one document (schema.py:205-225, pdf/links.py:224-231). Per-turn
 extraction emits (a) integer-only placeholder urls `#goto|turn|gid`
 inside spans and (b) a tiny `link_dests` side column. This operator is
-**100 % JVM-side**:
+**100 % JVM-side**, over a table whose size is O(#links), not O(#chars):
 
-1. aggregate `link_dests` into the registry — first-arrival dedup on
-   (conv_id, dest_page, coord), idx = arrival rank per dest page — two
-   window functions over a table whose size is O(#links), not O(#chars);
-2. broadcast-join the per-turn url map and per-turn refs arrays back;
-3. rewrite span urls / attach refs with nested `transform` expressions —
-   a pure columnar projection, no second Arrow round-trip for the heavy
-   nested page column (which also dodges a pyarrow segfault on
-   arrow→pandas for this depth of nesting).
+1. one aggregation per (conv_id, dest_page) collects that page's
+   registrations in arrival order (turn_idx, ord); the registry is the
+   `array_distinct` of their coordinates (first arrival wins) and a
+   registration's idx is its coordinate's position in it;
+2. one group-by on (conv_id, turn_idx) folds the per-source-turn url
+   entries (placeholder → `#page-<dest>-<idx>`) and the per-target-turn
+   refs arrays into ONE side table;
+3. ONE left join brings the side table to the heavy page column, and a
+   nested `transform` projection rewrites span urls and attaches refs —
+   no second Arrow round-trip for the heavy column (which also dodges a
+   pyarrow segfault on arrow→pandas for this depth of nesting). The
+   projection is one SQL expression, so building the plan costs a few
+   py4j calls rather than one per nested field reference.
 
 At 10^12 turns the registry is usually millions of rows — small enough
-to broadcast — but on link-dense corpora the per-turn url-map table is
-O(linked turns) and a hard-forced broadcast would OOM the driver instead
-of degrading. `resolve_refs` therefore counts the registrations (a
+to broadcast — but on link-dense corpora the side table is O(linked
+turns) and a hard-forced broadcast would OOM the driver instead of
+degrading. `resolve_refs` therefore counts the registrations (a
 column-pruned scan of the tiny `link_dests` column) and drops the
-`F.broadcast` hints above `broadcast_threshold`, letting AQE pick a
-broadcast or sort-merge join on (conv_id, turn_idx) at runtime. On the
-fallback path the two side tables are pre-merged into ONE per-(conv,
-turn) table so the heavy nested page column meets exactly one join; the
-broadcast hot path keeps two independent broadcast builds (measured
-faster than pre-merging — zero data shuffles either way there).
+`F.broadcast` hint above `broadcast_threshold`, letting AQE pick a
+broadcast or sort-merge join on (conv_id, turn_idx) at runtime. Either
+way the heavy page column meets exactly one join.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from pdftext_spark.operators.schema import PAGE
 
 
-def _registrations(extracted: DataFrame) -> DataFrame:
-    return (extracted
-            .where(F.size("link_dests") > 0)
-            .select("conv_id", "turn_idx", F.explode("link_dests").alias("r"))
-            .select("conv_id", "turn_idx", "r.ord", "r.gid", "r.dest_page",
-                    "r.x", "r.y"))
+# One side row per registration (its source turn's url entry) plus one per
+# dest page (the target turn's refs), so one group-by builds both.
+_SIDE_ROWS = """inline(concat(
+  transform(regs, r -> named_struct(
+    'turn_idx', r.turn_idx,
+    'entry', named_struct(
+      'k', concat('#goto|', CAST(r.turn_idx AS STRING), '|', CAST(r.gid AS STRING)),
+      'v', concat('#page-', CAST(dest_page AS STRING), '-',
+                  CAST(array_position(coords, named_struct('x', r.x, 'y', r.y)) - 1
+                       AS STRING))),
+    'page_refs', CAST(NULL AS ARRAY<STRUCT<idx: INT, x: DOUBLE, y: DOUBLE>>))),
+  array(named_struct(
+    'turn_idx', dest_page,
+    'entry', CAST(NULL AS STRUCT<k: STRING, v: STRING>),
+    'page_refs', transform(coords, (c, i) -> named_struct('idx', i, 'x', c.x, 'y', c.y))))))"""
+
+# rewrite_page_urls (core/links.py) as a projection: span urls through the
+# turn's url_map, refs from its page_refs; a turn the registry never
+# touches keeps its blocks and refs as they are.
+_NEW_PAGE = f"""CAST(CASE WHEN page IS NOT NULL THEN named_struct(
+  'page', page.page, 'bbox', page.bbox, 'width', page.width,
+  'height', page.height, 'rotation', page.rotation,
+  'blocks', CASE WHEN size(url_map) > 0 THEN transform(page.blocks, b -> named_struct(
+    'bbox', b.bbox,
+    'lines', transform(b.lines, ln -> named_struct(
+      'bbox', ln.bbox,
+      'spans', transform(ln.spans, s -> named_struct(
+        'bbox', s.bbox, 'text', s.text, 'font', s.font,
+        'char_start_idx', s.char_start_idx, 'char_end_idx', s.char_end_idx,
+        'rotation', s.rotation,
+        'url', coalesce(element_at(url_map, s.url), s.url),
+        'superscript', s.superscript, 'subscript', s.subscript,
+        'chars', s.chars))))))
+    ELSE page.blocks END,
+  'refs', CASE WHEN page_refs IS NOT NULL THEN transform(page_refs, r -> named_struct(
+    'idx', r.idx, 'page', page.page, 'coord', array(r.x, r.y),
+    'ref', concat('page-', CAST(page.page AS STRING), '-', CAST(r.idx AS STRING)),
+    'url', concat('#page-', CAST(page.page AS STRING), '-', CAST(r.idx AS STRING))))
+    ELSE page.refs END) END AS {PAGE.simpleString()}) AS page"""
 
 
-def _firsts(regs: DataFrame) -> DataFrame:
-    """Deduped registry: one row per distinct (conv, dest_page, coord) with
-    its arrival-rank idx — the add_ref semantics of schema.py:212-225."""
-    w_first = (Window.partitionBy("conv_id", "dest_page", "x", "y")
-               .orderBy("turn_idx", "ord"))
-    w_idx = Window.partitionBy("conv_id", "dest_page").orderBy("turn_idx", "ord")
-    return (regs.withColumn("rn", F.row_number().over(w_first))
-            .where(F.col("rn") == 1).drop("rn")
-            .withColumn("idx", F.row_number().over(w_idx) - 1))
+def _side_table(reg_source: DataFrame) -> DataFrame:
+    """(conv_id, turn_idx, url_map, page_refs): each turn's placeholder →
+    final-url map (empty when it registered nothing) and the refs pointing
+    at it (null when nothing does)."""
+    return (reg_source.where("size(link_dests) > 0")
+            .selectExpr("conv_id", "turn_idx", "inline(link_dests)")
+            # per (conv_id, dest_page): `regs` in processing order (turn_idx,
+            # ord) — the add_ref order of schema.py:212-225 — and the registry
+            # `coords`, first arrival wins. array_distinct and array_position
+            # compare structs with SQL ordering, so -0.0 and 0.0 are one
+            # coordinate, as under the oracle's tuple `==`.
+            .groupBy("conv_id", "dest_page")
+            .agg(F.expr("array_sort(collect_list(struct(turn_idx, ord, gid, x, y)))"
+                        " AS regs"))
+            .selectExpr("conv_id", "dest_page", "regs",
+                        "array_distinct(transform(regs, r -> "
+                        "named_struct('x', r.x, 'y', r.y))) AS coords")
+            .selectExpr("conv_id", _SIDE_ROWS)
+            # a gid registered twice in one turn yields its entry twice; the
+            # set keeps map_from_entries clear of duplicate keys
+            .groupBy("conv_id", "turn_idx")
+            .agg(F.expr("map_from_entries(collect_set(entry)) AS url_map"),
+                 F.expr("first(page_refs, true) AS page_refs")))
 
 
-def build_registry(extracted: DataFrame) -> DataFrame:
-    """(conv_id, turn_idx, gid, dest_page, idx) — every registration with
-    its resolved registry index (dedup on coords, first-arrival order)."""
-    regs = _registrations(extracted)
-    return (regs.join(_firsts(regs).select("conv_id", "dest_page", "x", "y", "idx"),
-                      on=["conv_id", "dest_page", "x", "y"], how="inner")
-            .select("conv_id", "turn_idx", "gid", "dest_page", "idx"))
-
-
-def _span_with_url(s: Column, url_map: Column) -> Column:
-    return F.struct(
-        s["bbox"].alias("bbox"),
-        s["text"].alias("text"),
-        s["font"].alias("font"),
-        s["char_start_idx"].alias("char_start_idx"),
-        s["char_end_idx"].alias("char_end_idx"),
-        s["rotation"].alias("rotation"),
-        F.coalesce(F.element_at(url_map, s["url"]), s["url"]).alias("url"),
-        s["superscript"].alias("superscript"),
-        s["subscript"].alias("subscript"),
-        s["chars"].alias("chars"),
-    )
-
-
-# Above this many registrations the per-turn url-map / target tables stop
-# being "obviously driver-safe" (rule of thumb: ~100 bytes/row -> ~500 MB
-# at 5e6, within spark.sql.autoBroadcastJoinThreshold territory but not a
-# forced-broadcast bet). AQE decides from real runtime sizes beyond it.
+# Above this many registrations the side table stops being "obviously
+# driver-safe" (rule of thumb: ~100 bytes/row -> ~500 MB at 5e6, within
+# spark.sql.autoBroadcastJoinThreshold territory but not a forced-broadcast
+# bet). AQE decides from real runtime sizes beyond it.
 DEFAULT_BROADCAST_THRESHOLD = 5_000_000
 
 
@@ -94,7 +119,7 @@ def resolve_refs(extracted: DataFrame, persist: bool = True,
     # 1. `registrations` given (operators/extract.py's light pre-pass over
     #    only link-bearing turns) — the heavy output is consumed exactly
     #    once; the small registrations frame is persisted since the
-    #    registry build + size gate read it several times;
+    #    registry build + size gate read it twice;
     # 2. persist=True — registry aggregated from `extracted` itself, which
     #    is persisted so the kernel doesn't re-run per consumer (tests,
     #    ad-hoc use);
@@ -109,25 +134,6 @@ def resolve_refs(extracted: DataFrame, persist: bool = True,
             extracted = extracted.persist()
             persisted.append(extracted)
         reg_source = extracted
-    registry = build_registry(reg_source)
-
-    # per-turn url maps: placeholder '#goto|turn|gid' -> '#page-dest-idx'
-    url_maps = (registry
-                .select("conv_id", "turn_idx", "gid", "dest_page", "idx")
-                .distinct()
-                .groupBy("conv_id", "turn_idx")
-                .agg(F.map_from_entries(F.collect_list(F.struct(
-                    F.concat(F.lit("#goto|"), F.col("turn_idx").cast("string"),
-                             F.lit("|"), F.col("gid").cast("string")).alias("k"),
-                    F.concat(F.lit("#page-"), F.col("dest_page").cast("string"),
-                             F.lit("-"), F.col("idx").cast("string")).alias("v"),
-                ))).alias("url_map")))
-
-    # per-target-turn refs arrays (refs POINTING TO that turn)
-    targets = (_firsts(_registrations(reg_source))
-               .groupBy("conv_id", F.col("dest_page").alias("turn_idx"))
-               .agg(F.sort_array(F.collect_list(F.struct("idx", "x", "y")))
-                    .alias("page_refs")))
 
     # Broadcast size gate (VERDICT r2): a hard-forced broadcast on a
     # link-dense corpus OOMs the driver instead of degrading. The
@@ -141,72 +147,12 @@ def resolve_refs(extracted: DataFrame, persist: bool = True,
                   .agg(F.sum("n")).collect()[0][0] or 0)
         do_broadcast = n_regs <= broadcast_threshold
 
-    if do_broadcast:
-        # hot path: two independent broadcast builds, zero data shuffles
-        # (measured faster than pre-merging them into one side table —
-        # the full_outer merge serializes the two agg pipelines behind a
-        # shuffle join before anything can broadcast)
-        out = (extracted.alias("e")
-               .join(F.broadcast(url_maps.alias("u")),
-                     on=[F.col("e.conv_id") == F.col("u.conv_id"),
-                         F.col("e.turn_idx") == F.col("u.turn_idx")],
-                     how="left")
-               .join(F.broadcast(targets.alias("t")),
-                     on=[F.col("e.conv_id") == F.col("t.conv_id"),
-                         F.col("e.turn_idx") == F.col("t.turn_idx")],
-                     how="left"))
-        page_refs = F.col("t.page_refs")
-    else:
-        # fallback (link-dense corpus): pre-merge the two side tables so
-        # the heavy page column meets exactly ONE sort-merge join instead
-        # of two; AQE may still convert it to broadcast at runtime
-        side = url_maps.join(targets, on=["conv_id", "turn_idx"],
-                             how="full_outer")
-        out = (extracted.alias("e")
-               .join(side.alias("u"),
-                     on=[F.col("e.conv_id") == F.col("u.conv_id"),
-                         F.col("e.turn_idx") == F.col("u.turn_idx")],
-                     how="left"))
-        page_refs = F.col("u.page_refs")
+    side = _side_table(reg_source)
+    out = extracted.join(F.broadcast(side) if do_broadcast else side,
+                         on=["conv_id", "turn_idx"], how="left")
 
-    page = F.col("e.page")
-    url_map = F.col("u.url_map")
-    refs_col = F.when(
-        page_refs.isNotNull(),
-        F.transform(page_refs, lambda r: F.struct(
-            r["idx"].alias("idx"),
-            page["page"].alias("page"),
-            F.array(r["x"], r["y"]).alias("coord"),
-            F.concat(F.lit("page-"), page["page"].cast("string"), F.lit("-"),
-                     r["idx"].cast("string")).alias("ref"),
-            F.concat(F.lit("#page-"), page["page"].cast("string"), F.lit("-"),
-                     r["idx"].cast("string")).alias("url"),
-        ))
-    ).otherwise(page["refs"])
-
-    blocks_col = F.when(url_map.isNotNull(), F.transform(
-        page["blocks"], lambda b: F.struct(
-            b["bbox"].alias("bbox"),
-            F.transform(b["lines"], lambda ln: F.struct(
-                ln["bbox"].alias("bbox"),
-                F.transform(ln["spans"], lambda s: _span_with_url(s, url_map))
-                .alias("spans"),
-            )).alias("lines"),
-        ))).otherwise(page["blocks"])
-
-    new_page = F.when(page.isNotNull(), F.struct(
-        page["page"].alias("page"),
-        page["bbox"].alias("bbox"),
-        page["width"].alias("width"),
-        page["height"].alias("height"),
-        page["rotation"].alias("rotation"),
-        blocks_col.alias("blocks"),
-        refs_col.alias("refs"),
-    ).cast(PAGE)).otherwise(F.lit(None).cast(PAGE))
-
-    keep = [F.col(f"e.{c}").alias(c) for c in extracted.columns if c != "page"]
-    result = out.select(*keep, new_page.alias("page")) \
-        .select(*extracted.columns)  # restore original column order
+    result = out.selectExpr(*[_NEW_PAGE if c == "page" else f"`{c}`"
+                              for c in extracted.columns])
     # handle for cache-eviction seams (queries.unpersist_tier /
     # release_persisted below): the persist above is internal, so callers
     # need this to release storage memory

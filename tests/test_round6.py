@@ -116,6 +116,24 @@ def test_route_batch_arrow_equals_list():
             assert np.array_equal(got.seg.chars.boxes, ref.seg.chars.boxes)
 
 
+def test_route_batch_rejects_other_arrow_string_types():
+    """_arrow_text_view reads the offsets+data layout of string and
+    large_string arrays only; a string_view or dictionary array must fail
+    loudly instead of being parsed as garbage."""
+    import pyarrow as pa
+    import pytest
+
+    from pdftext_spark.core.api import route_batch
+
+    texts = ['{"kind":"chars","page_bbox":[0,0,100,100],"text":"hi",'
+             '"bbox":[1,2,3,4,5,6,7,8]}', "plain prose"]
+    for arr in (pa.array(texts, type=pa.string_view()),
+                pa.array(texts).dictionary_encode(),
+                pa.chunked_array([pa.array(texts).dictionary_encode()])):
+        with pytest.raises(TypeError, match="string"):
+            route_batch(arr, ["user", "user"], [0, 1])
+
+
 def test_kernel_runs_from_foreign_cwd(tmp_path):
     """The Python workers must resolve pdftext_spark regardless of the
     driver's cwd (build_session ships the checkout root on the workers'

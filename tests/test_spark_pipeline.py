@@ -147,18 +147,57 @@ def test_error_isolation(spark):
     assert out[1]["error"] is None and out[1]["text"] == "plain prose"
 
 
+def _plan_nodes(plan):
+    """Every distinct physical node under `plan`, looking through AQE
+    wrappers and query stages (but not into cached plans)."""
+    seen, stack = {}, [plan]
+    while stack:
+        p = stack.pop()
+        name = p.nodeName()
+        if name == "AdaptiveSparkPlan":
+            stack.append(p.executedPlan())
+        elif name.endswith("QueryStage"):
+            stack.append(p.plan())
+        elif p.id() not in seen:
+            seen[p.id()] = p
+            kids = p.children()
+            stack.extend(kids.apply(i) for i in range(kids.size()))
+    return list(seen.values())
+
+
+def _output_names(p):
+    out = p.output()
+    return {out.apply(i).name() for i in range(out.size())}
+
+
 def test_no_heavy_shuffle_after_kernel(spark, transcripts):
-    """Plan shape: the refs-resolution joins must be broadcast joins — the
-    nested page column shuffles exactly once (the salted repartition)."""
+    """Plan shape: the payload and the nested page column shuffle exactly
+    once (the salted repartition, inside the cached kernel output); refs
+    resolution adds ONE broadcast join against that cache, and its own
+    shuffles (at most two) carry registration data only."""
     df = extract(transcripts, ExtractConfig())
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan or "BroadcastNestedLoopJoin" in plan
-    # count Exchange operators that carry the heavy 'page' column: the only
-    # hashpartitioning exchange of the full row set is the salt
-    import re
-    exchanges = [l for l in plan.splitlines() if "Exchange hashpartitioning" in l]
-    heavy = [l for l in exchanges if "conv_id" in l and "turn_idx" in l and "page" not in l]
-    assert len(exchanges) >= 1
+    refs_plan = _plan_nodes(df._jdf.queryExecution().executedPlan())
+
+    scans = [p for p in refs_plan if p.nodeName() == "InMemoryTableScan"]
+    kernel_shuffles = [p for s in scans
+                       for p in _plan_nodes(s.relation().cachedPlan())
+                       if p.nodeName() == "Exchange"]
+    assert kernel_shuffles
+    for p in kernel_shuffles:
+        assert "hashpartitioning(conv_id" in p.simpleString(100)
+        assert "REPARTITION_BY_NUM" in p.simpleString(100)
+
+    joins = [p for p in refs_plan if "Join" in p.nodeName()]
+    assert [j.nodeName() for j in joins] == ["BroadcastHashJoin"]
+    assert joins[0].left().nodeName() == "InMemoryTableScan"
+    assert joins[0].buildSide().toString() == "BuildRight"
+
+    refs_shuffles = [p for p in refs_plan if p.nodeName() == "Exchange"]
+    build_side = {p.id() for p in _plan_nodes(joins[0].right())}
+    assert 1 <= len(refs_shuffles) <= 2
+    for p in refs_shuffles:
+        assert p.id() in build_side
+        assert not {"text", "page", "tables"} & _output_names(p.child())
 
 
 def test_refs_broadcast_fallback_parity(spark, transcripts):
