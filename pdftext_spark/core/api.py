@@ -115,6 +115,28 @@ def _arrow_text_view(texts):
     return raw_at, str_at
 
 
+def release_zip_importers() -> None:
+    """Drop every zipimporter from sys.path_importer_cache.
+
+    pyspark calls importlib.invalidate_caches() before every task, and
+    under CPython 3.11 each cached zipimporter then re-reads the central
+    directory of its whole archive. A worker's sys.path starts with
+    Spark's own archives (pyspark.zip, the py4j zip, the spark-core jar),
+    so 16 importers re-read them on every task — 0.14-0.34 s a task,
+    more than the kernel takes on a 250-row batch. Called once per kernel
+    task, it leaves a reused worker's next invalidate_caches() nothing to
+    reload. Safe because Spark never rewrites those archives while a
+    worker lives, and a later import rebuilds its importer from
+    zipimport's own directory cache without reading the archive again."""
+    import sys
+    import zipimport
+
+    cache = sys.path_importer_cache
+    for path, importer in list(cache.items()):
+        if isinstance(importer, zipimport.zipimporter):
+            cache.pop(path, None)
+
+
 def route_batch(texts, roles: list, turn_idxs: list,
                 cfg: ExtractConfig = ExtractConfig()) -> RoutedBatch:
     """`texts` is either a list[str | None] or a pyarrow (large_)string

@@ -45,17 +45,26 @@ def _has_shuffle_exchange(plan_text: str) -> bool:
     return _SHUFFLE_EXCHANGE.search(plan_text) is not None
 
 
+def _routed(batches, cfg: ExtractConfig):
+    """The shared preamble of every kernel closure: once per task, release
+    the worker's zip importers (core.api.release_zip_importers); then
+    yield (batch, col, rb) per Arrow batch, where col(name) is the named
+    input column and rb is route_batch over it."""
+    from pdftext_spark.core.api import release_zip_importers, route_batch
+    release_zip_importers()
+    for batch in batches:
+        def col(name):
+            return batch.column(batch.schema.get_field_index(name))
+        yield batch, col, route_batch(col("text"), col("role").to_pylist(),
+                                      col("turn_idx").to_pylist(), cfg)
+
+
 def _arrow_kernel(cfg: ExtractConfig, target_schema):
     """mapInArrow fast path: RecordBatch in → RecordBatch out, nested
     arrays built straight from segmentation offsets (core/arrow_out.py)."""
     def run(batches):
-        from pdftext_spark.core.api import route_batch
         from pdftext_spark.core.arrow_out import assemble_record_batch
-        for batch in batches:
-            def col(name):
-                return batch.column(batch.schema.get_field_index(name))
-            rb = route_batch(col("text"), col("role").to_pylist(),
-                             col("turn_idx").to_pylist(), cfg)
+        for batch, _, rb in _routed(batches, cfg):
             yield assemble_record_batch(batch, rb, cfg, target_schema)
     return run
 
@@ -85,13 +94,8 @@ def link_registrations(transcripts: DataFrame, cfg: ExtractConfig) -> DataFrame:
     target = to_arrow_schema(schema)
 
     def run(batches):
-        from pdftext_spark.core.api import route_batch
         from pdftext_spark.core.arrow_out import LINK_DEST_PA
-        for batch in batches:
-            def col(name):
-                return batch.column(batch.schema.get_field_index(name))
-            rb = route_batch(col("text"), col("role").to_pylist(),
-                             col("turn_idx").to_pylist(), light_cfg)
+        for _, col, rb in _routed(batches, light_cfg):
             dests = [[] for _ in range(rb.n)]
             for local, i in enumerate(rb.doc_pos):
                 if local in rb.regs_by_local:
@@ -122,6 +126,9 @@ def _apply_salt(transcripts: DataFrame, cfg: ExtractConfig, spark) -> DataFrame:
     yields byte-balanced fine-grained splits — file sources split by
     size, so compute ∝ bytes is balanced by construction — the extra
     full-payload shuffle buys nothing; skip it."""
+    if cfg.salt not in ("auto", "always", "never"):
+        raise ValueError("ExtractConfig.salt must be 'auto', 'always' or "
+                         f"'never', got {cfg.salt!r}")
     n_parts = cfg.partitions or spark.sparkContext.defaultParallelism * 2
     if cfg.salt == "never":
         return transcripts
@@ -180,6 +187,9 @@ def extract(transcripts: DataFrame, cfg: ExtractConfig = ExtractConfig(),
     for a fully lazy plan with an unconditionally hinted broadcast —
     appropriate when composing plans for explain()/inspection or when
     the corpus is known not to be link-dense."""
+    if links_via not in ("persist", "prepass"):
+        raise ValueError("links_via must be 'persist' or 'prepass', "
+                         f"got {links_via!r}")
     spark = transcripts.sparkSession
     # Catalyst cannot prune columns INTO the Python kernel, so project the
     # kernel's contract explicitly — extra input columns (e.g. `tool`)
@@ -242,13 +252,8 @@ def plain_text_variants(transcripts: DataFrame,
     target = to_arrow_schema(schema)
 
     def run(batches):
-        from pdftext_spark.core.api import route_batch
         from pdftext_spark.core.assemble import plain_text_batch
-        for batch in batches:
-            def col(name):
-                return batch.column(batch.schema.get_field_index(name))
-            rb = route_batch(col("text"), col("role").to_pylist(),
-                             col("turn_idx").to_pylist(), cfg)
+        for _, col, rb in _routed(batches, cfg):
             plain: list = [None] * rb.n
             srt: list = [None] * rb.n
             hyp: list = [None] * rb.n
@@ -301,12 +306,7 @@ def plain_text(transcripts: DataFrame, cfg: ExtractConfig = ExtractConfig()) -> 
     target = to_arrow_schema(schema)
 
     def run(batches):
-        from pdftext_spark.core.api import route_batch
-        for batch in batches:
-            def col(name):
-                return batch.column(batch.schema.get_field_index(name))
-            rb = route_batch(col("text"), col("role").to_pylist(),
-                             col("turn_idx").to_pylist(), cfg)
+        for _, col, rb in _routed(batches, cfg):
             out: list = [None] * rb.n
             for i, o in enumerate(rb.outputs):
                 if o is not None:

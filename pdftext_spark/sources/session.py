@@ -14,28 +14,44 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
-def build_session(app: str = "pdftext_spark", master: str | None = None,
-                  shuffle_partitions: int | None = None,
-                  max_partition_bytes: str | None = None) -> SparkSession:
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
-    # The kernel closures import pdftext_spark inside the Python workers;
-    # when the driver is launched from another cwd the workers would
-    # otherwise have no way to resolve the package (ModuleNotFoundError
-    # in every task). Ship the package root on the workers' PYTHONPATH —
-    # the local-mode equivalent of --py-files for a checkout.
+def worker_pythonpath(master: str) -> str | None:
+    """The Python workers' PYTHONPATH for `master`, or None to leave it
+    unset.
+
+    The kernel closures import pdftext_spark inside the Python workers;
+    when a local driver is launched from another cwd the workers would
+    otherwise have no way to resolve the package (ModuleNotFoundError in
+    every task). For `local[...]` and `local-cluster[...]` masters the
+    driver's own PYTHONPATH is shipped with the checkout root in front —
+    the local-mode equivalent of --py-files for a checkout. Any other
+    master gets None: its executors run on other hosts, where the
+    driver's paths mean nothing."""
+    if not master.startswith("local"):
+        return None
     repo_root = os.path.dirname(os.path.dirname(
         os.path.dirname(os.path.abspath(__file__))))
     worker_pp = os.environ.get("PYTHONPATH", "")
-    if repo_root not in worker_pp.split(os.pathsep):
-        worker_pp = (repo_root + os.pathsep + worker_pp) if worker_pp \
-            else repo_root
+    if repo_root in worker_pp.split(os.pathsep):
+        return worker_pp
+    return (repo_root + os.pathsep + worker_pp) if worker_pp else repo_root
+
+
+def build_session(app: str = "pdftext_spark", master: str | None = None,
+                  shuffle_partitions: int | None = None,
+                  max_partition_bytes: str | None = None) -> SparkSession:
+    """A SparkSession with the engine's tuned confs. `master` defaults to
+    local[SPARK_GRAFT_CPUS]. Local masters get the checkout root on the
+    workers' PYTHONPATH (worker_pythonpath); on a cluster, ship the
+    package with `--py-files` / `spark.submit.pyFiles` instead (see
+    scripts/run_job.py)."""
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
     master = master or f"local[{cpus}]"
     shuffle = shuffle_partitions or max(cpus * 2, 8)
     # sandbox inputs are tens of MB, so the 128 MB default collapses the
     # scan into one task; on a real cluster with TB inputs leave the default
     mpb = max_partition_bytes or os.environ.get(
         "PDFTEXT_SPARK_MAX_PARTITION_BYTES", "4m")
-    return (
+    builder = (
         SparkSession.builder
         .appName(app)
         .master(master)
@@ -60,11 +76,13 @@ def build_session(app: str = "pdftext_spark", master: str | None = None,
         # cost is each worker's RSS staying at its peak working set.
         .config("spark.executorEnv.MALLOC_MMAP_THRESHOLD_", "1073741824")
         .config("spark.executorEnv.MALLOC_TRIM_THRESHOLD_", "536870912")
-        .config("spark.executorEnv.PYTHONPATH", worker_pp)
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("PDFTEXT_SPARK_DRIVER_MEM", "8g"))
-        .getOrCreate()
     )
+    worker_pp = worker_pythonpath(master)
+    if worker_pp is not None:
+        builder = builder.config("spark.executorEnv.PYTHONPATH", worker_pp)
+    return builder.getOrCreate()
 
 
 TRANSCRIPT_SCHEMA = ("conv_id string, turn_idx int, role string, "

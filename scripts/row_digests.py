@@ -1,9 +1,10 @@
 #!/usr/bin/env python
-"""Per-row digests of extract() output, to show that a refactor leaves
-every output row bit-identical. Digests are
-xxhash64(to_json(struct(*EXTRACTED))) keyed by "conv_id/turn_idx", for the
-default join path, the unhinted one (broadcast_threshold=0) and
-links_via="prepass". Run it once from each checkout, then compare:
+"""Per-row digests of the extraction operators' output, to show that a
+refactor leaves every output row bit-identical. Digests are
+xxhash64(to_json(struct(*columns))) keyed by "conv_id/turn_idx", for
+extract() on the default join path, the unhinted one
+(broadcast_threshold=0) and links_via="prepass", and for plain_text()
+and plain_text_variants(). Run it once from each checkout, then compare:
 
     python scripts/row_digests.py OUT.json TRANSCRIPTS.parquet [...]
     python scripts/row_digests.py --compare A.json B.json
@@ -17,26 +18,30 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-MODES = {"default": {}, "threshold0": {"broadcast_threshold": 0},
-         "prepass": {"links_via": "prepass"}}
+# mode -> (operators.extract function, keyword arguments)
+MODES = {"default": ("extract", {}),
+         "threshold0": ("extract", {"broadcast_threshold": 0}),
+         "prepass": ("extract", {"links_via": "prepass"}),
+         "plain": ("plain_text", {}),
+         "variants": ("plain_text_variants", {})}
 
 
 def digests(paths: list[str]) -> dict:
     from pyspark.sql import functions as F
 
-    from pdftext_spark.operators.extract import extract
-    from pdftext_spark.operators.schema import EXTRACTED
+    from pdftext_spark.operators import extract as ops
     from pdftext_spark.sources.session import build_session
 
     spark = build_session(app="row-digests")
-    row = F.xxhash64(F.to_json(F.struct(*EXTRACTED.fieldNames())))
     out: dict = {}
     try:
         for path in paths:
-            for mode, kw in MODES.items():
+            for mode, (fn, kw) in MODES.items():
                 spark.catalog.clearCache()
-                rows = extract(spark.read.parquet(path), **kw).select(
-                    "conv_id", "turn_idx", row.alias("h")).collect()
+                df = getattr(ops, fn)(spark.read.parquet(path), **kw)
+                row = F.xxhash64(F.to_json(F.struct(*df.columns)))
+                rows = df.select("conv_id", "turn_idx",
+                                 row.alias("h")).collect()
                 out.setdefault(path, {})[mode] = {
                     f"{r.conv_id}/{r.turn_idx}": r.h for r in rows}
     finally:

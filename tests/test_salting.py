@@ -1,7 +1,9 @@
 """Skew handling: the anti-skew salt engages exactly when it should."""
 
+import pytest
+
 from pdftext_spark.config import ExtractConfig
-from pdftext_spark.operators.extract import extract
+from pdftext_spark.operators.extract import extract, plain_text
 
 
 def _plan(df):
@@ -37,6 +39,12 @@ def test_salt_always_forces_shuffle(spark, transcripts):
     plan = _plan(extract(transcripts.repartition(64),
                          ExtractConfig(salt="always"), resolve_links=False))
     assert "hashpartitioning(conv_id" in plan
+
+
+def test_unknown_salt_mode_fails_loudly(spark, transcripts):
+    """A typo in ExtractConfig.salt must not silently run as "auto"."""
+    with pytest.raises(ValueError, match="'auto', 'always' or 'never'"):
+        plain_text(transcripts, ExtractConfig(salt="alwyas"))
 
 
 def test_skew_report_multi_key(spark):

@@ -220,6 +220,13 @@ def test_refs_broadcast_fallback_parity(spark, transcripts):
         ext.unpersist()
 
 
+def test_unknown_links_via_fails_loudly(spark, transcripts):
+    """Any links_via other than "persist"/"prepass" used to run as
+    "persist"; it must raise before a job runs."""
+    with pytest.raises(ValueError, match="'persist' or 'prepass'"):
+        extract(transcripts, ExtractConfig(), links_via="prepas")
+
+
 def test_links_via_prepass_matches_persist(spark, transcripts):
     """The opt-in storage-constrained refs path (second filtered kernel
     pass) must produce byte-identical output to the default cached
