@@ -16,11 +16,13 @@ from __future__ import annotations
 from typing import Optional
 
 from pdftext_spark.config import ExtractConfig
-from pdftext_spark.core.api import process_batch
+from pdftext_spark.core.arrow_out import extract_rows
 from pdftext_spark.core.links import resolve_conversation_refs, rewrite_page_urls
 
 
 def _run(payloads, page_range, cfg, roles=None):
+    """EXTRACTED rows (dicts) for the selected pages, links resolved
+    across them."""
     if page_range is None:
         page_range = range(len(payloads))
     page_range = list(page_range)
@@ -36,15 +38,35 @@ def _run(payloads, page_range, cfg, roles=None):
     # operator does; PDF-shaped callers (the reference surface) omit them
     rr = (["user"] * len(texts) if roles is None
           else [roles[i] for i in page_range])
-    outs = process_batch(texts, rr, page_range, cfg)
+    rows = extract_rows(texts, rr, page_range, cfg)
     if not cfg.disable_links and cfg.emit_struct:
-        regs = [(page_range[i], *r) for i, o in enumerate(outs)
-                for r in o.registrations]
+        regs = [(row["turn_idx"], d["ord"], d["gid"], d["dest_page"],
+                 d["x"], d["y"]) for row in rows for d in row["link_dests"]]
         url_map, refs_by_page = resolve_conversation_refs(regs)
-        for o in outs:
-            if o.page is not None:
-                rewrite_page_urls(o.page, url_map, refs_by_page)
-    return outs
+        for row in rows:
+            if row["page"] is not None:
+                rewrite_page_urls(row["page"], url_map, refs_by_page)
+    return rows
+
+
+def _reference_page(page):
+    """An EXTRACTED page in pdftext's dict shape (SURVEY P2), in place:
+    a span has `chars` only with keep_chars, each char carries its span's
+    font, and lines/blocks list their children before their bbox."""
+    if page is None:
+        return None
+    for blk in page["blocks"]:
+        for ln in blk["lines"]:
+            for sp in ln["spans"]:
+                chars = sp.pop("chars")
+                if chars is not None:
+                    sp["chars"] = [
+                        {"bbox": c["bbox"], "char": c["char"],
+                         "rotation": c["rotation"], "font": sp["font"],
+                         "char_idx": c["char_idx"]} for c in chars]
+            ln["bbox"] = ln.pop("bbox")
+        blk["bbox"] = blk.pop("bbox")
+    return page
 
 
 def paginated_plain_text_output(payloads: list, sort: bool = False,
@@ -55,7 +77,7 @@ def paginated_plain_text_output(payloads: list, sort: bool = False,
     """extraction.py:75-80 — per-page plain text, stripped."""
     cfg = ExtractConfig(sort=sort, hyphens=hyphens, emit_struct=False,
                         emit_tables=False, disable_links=True)
-    return [o.text for o in _run(payloads, page_range, cfg, roles=roles)]
+    return [row["text"] for row in _run(payloads, page_range, cfg, roles=roles)]
 
 
 def plain_text_output(payloads: list, sort: bool = False, hyphens: bool = False,
@@ -77,7 +99,8 @@ def dictionary_output(payloads: list, sort: bool = False, page_range=None,
     cfg = ExtractConfig(sort=sort, keep_chars=keep_chars,
                         quote_loosebox=quote_loosebox,
                         disable_links=disable_links, emit_tables=False)
-    return [o.page for o in _run(payloads, page_range, cfg, roles=roles)]
+    return [_reference_page(row["page"])
+            for row in _run(payloads, page_range, cfg, roles=roles)]
 
 
 def table_output(payloads: list, table_inputs: Optional[list] = None,
@@ -90,8 +113,7 @@ def table_output(payloads: list, table_inputs: Optional[list] = None,
     honored when given."""
     cfg = ExtractConfig(quote_loosebox=quote_loosebox)
     if table_inputs is None:
-        outs = _run(payloads, page_range, cfg)
-        return [o.tables for o in outs]
+        return [row["tables"] for row in _run(payloads, page_range, cfg)]
     if page_range is None:
         page_range = range(len(payloads))
     page_range = list(page_range)
@@ -99,15 +121,15 @@ def table_output(payloads: list, table_inputs: Optional[list] = None,
         "Number of pages and table inputs must match"
     import json
 
-    from pdftext_spark.core.payload import maybe_parse_payload
+    from pdftext_spark.core.payload import maybe_parse_payload_raw
     patched = []
     for i, ti in zip(page_range, table_inputs):
-        obj = maybe_parse_payload(payloads[i]) or {}
+        obj = maybe_parse_payload_raw((payloads[i] or "").encode()) or {}
         obj["tables"] = ti["tables"]
         obj["img_size"] = ti["img_size"]
         patched.append(json.dumps(obj, ensure_ascii=False))
-    outs = _run(patched, list(range(len(patched))), cfg)
-    return [o.tables for o in outs]
+    return [row["tables"]
+            for row in _run(patched, list(range(len(patched))), cfg)]
 
 
 def parse_range_str(range_str: str) -> list[int]:

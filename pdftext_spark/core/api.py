@@ -6,26 +6,25 @@ through the boilerplate-strip/main-content scorer; everything else is a
 char-stream payload (or plain prose, which degrades to a synthesized
 monospace layout) and goes through the segmentation kernel.
 
-Two consumers share the routing/segmentation core (`route_batch`):
-- `process_batch` → per-turn dicts (tests, the keep_chars path);
-- `core/arrow_out.py` → columnar pyarrow assembly straight from
-  segmentation offsets (the Spark fast path — no per-span Python dicts,
-  no pandas→Arrow conversion).
+There is one kernel path: `route_batch` reads an Arrow string column and
+`core/arrow_out.py` assembles the output columns straight from the
+segmentation offsets (no per-span Python dicts, no pandas→Arrow
+conversion). Callers holding a Python list go through
+`arrow_out.extract_rows`, which wraps the list in an Arrow array first.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from typing import Optional
 
 import numpy as np
 
 from pdftext_spark.config import ExtractConfig
-from pdftext_spark.core.assemble import plain_text_batch, struct_page
+from pdftext_spark.core.assemble import plain_text_batch
 from pdftext_spark.core.html_main import extract_main_text
 from pdftext_spark.core.links import merge_turn_links
 from pdftext_spark.core.payload import (
-    decode_any_turn,
     decode_turn,
     maybe_parse_payload_raw,
     prose_to_decoded,
@@ -36,13 +35,9 @@ from pdftext_spark.core.tables import table_cells_turn
 
 @dataclass
 class TurnOutput:
-    text: str                      # plain-text render (merge_text(...).strip())
-    page: Optional[dict] = None    # dictionary_output page (None for HTML turns)
-    tables: list = field(default_factory=list)
-    registrations: list = field(default_factory=list)  # (ord, gid, dest_page, x, y)
-    n_chars: int = 0
-    n_spans: int = 0
-    n_blocks: int = 0
+    """An HTML or error row's output; doc turns live in the Segmentation."""
+
+    text: str                      # main-content text ("" on error)
     is_html: bool = False
     error: Optional[str] = None
 
@@ -64,6 +59,16 @@ class RoutedBatch:
     char_counts: Optional[np.ndarray]
     span_counts: Optional[np.ndarray]
 
+    def row_texts(self, plains: Optional[list] = None) -> list:
+        """Text per batch row: an HTML/error row's `outputs[i].text`, a doc
+        turn's render from `plains` (default: this batch's plain texts)."""
+        if plains is None:
+            plains = self.plains
+        out = [None if o is None else o.text for o in self.outputs]
+        for local, i in enumerate(self.doc_pos):
+            out[i] = plains[local]
+        return out
+
 
 def _arrow_text_view(texts):
     """(raw_at, str_at) accessors over an Arrow string array.
@@ -73,18 +78,19 @@ def _arrow_text_view(texts):
     decode of the whole batch and orjson's internal str→UTF-8 re-encode
     (~45% of the scan-and-parse cost on a payload corpus). str_at(i)
     decodes a single row on demand for the HTML/prose minority paths;
-    it produces exactly `to_pylist()[i]` (same UTF-8 decode). Any type
-    but string/large_string raises TypeError."""
+    it produces exactly `to_pylist()[i]` (same UTF-8 decode). Anything
+    but a string/large_string array (a Python list included) raises
+    TypeError."""
     import pyarrow as pa
 
     if isinstance(texts, pa.ChunkedArray):
         texts = texts.combine_chunks()
     # the buffer walk below knows only the offsets+data layout; any other
     # encoding (string_view, dictionary, ...) would be misread silently
-    if not (pa.types.is_string(texts.type)
-            or pa.types.is_large_string(texts.type)):
-        raise TypeError(
-            f"expected a string or large_string array, got {texts.type}")
+    typ = texts.type if isinstance(texts, pa.Array) else type(texts).__name__
+    if not isinstance(texts, pa.Array) or not (
+            pa.types.is_string(typ) or pa.types.is_large_string(typ)):
+        raise TypeError(f"expected a string or large_string array, got {typ}")
     if pa.types.is_large_string(texts.type):
         odtype, owidth = np.int64, 8
     else:
@@ -139,36 +145,28 @@ def release_zip_importers() -> None:
 
 def route_batch(texts, roles: list, turn_idxs: list,
                 cfg: ExtractConfig = ExtractConfig()) -> RoutedBatch:
-    """`texts` is either a list[str | None] or a pyarrow (large_)string
-    array; the Arrow form is the Spark fast path (zero-copy payload
-    parsing), the list form the plain-Python surface for tests/callers.
-    Outputs are identical — both parsers read the same UTF-8 bytes."""
+    """Route and segment one batch. `texts` is a pyarrow (large_)string
+    array (plain or chunked), read zero-copy; payload turns are parsed
+    straight from its UTF-8 buffer."""
     n = len(texts)
     outputs: list[Optional[TurnOutput]] = [None] * n
-
-    is_arrow = not isinstance(texts, (list, tuple))
-    if is_arrow:
-        raw_at, str_at = _arrow_text_view(texts)
+    raw_at, str_at = _arrow_text_view(texts)
 
     doc_pos: list[int] = []
     decoded = []
     for i in range(n):
         if roles[i] == "tool":
             try:
-                main = extract_main_text(
-                    (str_at(i) if is_arrow else texts[i]) or "")
+                main = extract_main_text(str_at(i) or "")
             except Exception as exc:  # defensive: never kill the batch
                 outputs[i] = TurnOutput(text="", is_html=True, error=repr(exc))
                 continue
             outputs[i] = TurnOutput(text=main, is_html=True)
         else:
             try:
-                if is_arrow:
-                    obj = maybe_parse_payload_raw(raw_at(i))
-                    dt = (prose_to_decoded(str_at(i) or "") if obj is None
-                          else decode_turn(obj, cfg.quote_loosebox))
-                else:
-                    dt = decode_any_turn(texts[i], cfg.quote_loosebox)
+                obj = maybe_parse_payload_raw(raw_at(i))
+                dt = (prose_to_decoded(str_at(i) or "") if obj is None
+                      else decode_turn(obj, cfg.quote_loosebox))
             except Exception as exc:
                 # A bad payload must not kill the whole Arrow batch at scale;
                 # route it to the error/lineage channel instead.
@@ -225,30 +223,6 @@ def route_batch(texts, roles: list, turn_idxs: list,
     return RoutedBatch(n, outputs, doc_pos, decoded, page_ids, seg, plains,
                        splits_by_local, tables_by_local, regs_by_local,
                        char_counts, span_counts)
-
-
-def process_batch(texts: list, roles: list, turn_idxs: list,
-                  cfg: ExtractConfig = ExtractConfig()) -> list[TurnOutput]:
-    rb = route_batch(texts, roles, turn_idxs, cfg)
-    seg = rb.seg
-    for local, i in enumerate(rb.doc_pos):
-        page = None
-        if cfg.emit_struct:
-            page = struct_page(seg, local, rb.page_ids[local],
-                               keep_chars=cfg.keep_chars, sort=cfg.sort,
-                               span_splits=rb.splits_by_local.get(local),
-                               sort_tolerance=cfg.sort_tolerance)
-        blo, bhi = int(seg.turn_block_lo[local]), int(seg.turn_block_hi[local])
-        rb.outputs[i] = TurnOutput(
-            text=rb.plains[local],
-            page=page,
-            tables=rb.tables_by_local.get(local, []),
-            registrations=rb.regs_by_local.get(local, []),
-            n_chars=int(rb.char_counts[local]),
-            n_spans=int(rb.span_counts[local]),
-            n_blocks=bhi - blo,
-        )
-    return rb.outputs  # type: ignore[return-value]
 
 
 def _span_start_mask(seg: Segmentation) -> np.ndarray:

@@ -2,9 +2,10 @@
 
 Builds the nested `page` column (blocks→lines→spans) DIRECTLY from
 segmentation offsets as Arrow ListArray/StructArray — no per-span Python
-dicts and no pandas→Arrow conversion. This is the ONLY Spark path
-(`mapInArrow`, keep_chars included); the dict-based `struct_page`
-remains for no-JVM library use and tests.
+dicts and no pandas→Arrow conversion. This is the only output path:
+Spark's `mapInArrow` (keep_chars included) runs `assemble_record_batch`,
+and `extract_rows` runs the same code without a JVM for library callers
+(api_compat) and tests.
 
 Hierarchy offsets fall out of the segmentation for free: spans are
 contiguous char ranges, lines contiguous span ranges, blocks contiguous
@@ -20,7 +21,7 @@ import pyarrow as pa
 import pyarrow.compute as pc
 
 from pdftext_spark.config import ExtractConfig
-from pdftext_spark.core.api import RoutedBatch
+from pdftext_spark.core.api import RoutedBatch, route_batch
 from pdftext_spark.core.assemble import postprocess_ranges, sort_order
 
 CHAR_PA = pa.struct([
@@ -291,6 +292,18 @@ def build_page_array(rb: RoutedBatch, cfg: ExtractConfig) -> pa.StructArray:
     ], fields=list(PAGE_PA))
 
 
+def link_dests_column(rb: RoutedBatch) -> pa.Array:
+    """LINK_DEST_PA column, one row per batch row: each doc turn's link
+    registrations as {ord, gid, dest_page, x, y} structs."""
+    dests: list = [[] for _ in range(rb.n)]
+    for local, i in enumerate(rb.doc_pos):
+        if local in rb.regs_by_local:
+            dests[i] = [
+                {"ord": r[0], "gid": r[1], "dest_page": r[2], "x": r[3], "y": r[4]}
+                for r in rb.regs_by_local[local]]
+    return pa.array(dests, type=LINK_DEST_PA)
+
+
 def assemble_record_batch(batch: pa.RecordBatch, rb: RoutedBatch,
                           cfg: ExtractConfig,
                           target_schema: pa.Schema) -> pa.RecordBatch:
@@ -299,31 +312,23 @@ def assemble_record_batch(batch: pa.RecordBatch, rb: RoutedBatch,
     n = rb.n
     T = len(rb.decoded)
 
-    text_rows: list = [None] * n
     is_html = np.zeros(n, dtype=bool)
     errors: list = [None] * n
     n_chars = np.zeros(n, dtype=np.int32)
     n_spans = np.zeros(n, dtype=np.int32)
     n_blocks_row = np.zeros(n, dtype=np.int32)
     tables_rows: list = [[] for _ in range(n)]
-    dests_rows: list = [[] for _ in range(n)]
     for i, o in enumerate(rb.outputs):
         if o is not None:
-            text_rows[i] = o.text
             is_html[i] = o.is_html
             errors[i] = o.error
     for local, i in enumerate(rb.doc_pos):
-        text_rows[i] = rb.plains[local]
         n_chars[i] = rb.char_counts[local]
         n_spans[i] = rb.span_counts[local]
         n_blocks_row[i] = (rb.seg.turn_block_hi[local]
                            - rb.seg.turn_block_lo[local])
         if local in rb.tables_by_local:
             tables_rows[i] = rb.tables_by_local[local]
-        if local in rb.regs_by_local:
-            dests_rows[i] = [
-                {"ord": r[0], "gid": r[1], "dest_page": r[2], "x": r[3], "y": r[4]}
-                for r in rb.regs_by_local[local]]
 
     if cfg.emit_struct and T:
         doc_pages = build_page_array(rb, cfg)
@@ -341,14 +346,39 @@ def assemble_record_batch(batch: pa.RecordBatch, rb: RoutedBatch,
         col("turn_idx"),
         col("role"),
         col("ts"),
-        pa.array(text_rows, type=pa.string()),
+        pa.array(rb.row_texts(), type=pa.string()),
         pa.array(is_html),
         page_col,
         pa.array(tables_rows, type=TABLES_PA),
-        pa.array(dests_rows, type=LINK_DEST_PA),
+        link_dests_column(rb),
         pa.array(errors, type=pa.string()),
         pa.array(n_chars),
         pa.array(n_spans),
         pa.array(n_blocks_row),
     ]
     return pa.RecordBatch.from_arrays(arrays, schema=target_schema)
+
+
+def extract_rows(texts: list, roles: list, turn_idxs: list,
+                 cfg: ExtractConfig = ExtractConfig()) -> list[dict]:
+    """EXTRACTED rows (as dicts) for a list of turn texts, without Spark:
+    the list becomes one Arrow batch (null conv_id/ts) that runs through
+    `route_batch` + `assemble_record_batch`, the code `mapInArrow`
+    executes. Links are left unresolved: spans keep their placeholder
+    urls and `link_dests` carries the registrations."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    from pdftext_spark.operators.schema import EXTRACTED
+
+    target = to_arrow_schema(EXTRACTED)
+    text = pa.array(texts, pa.string())
+    n = len(text)
+    batch = pa.RecordBatch.from_arrays([
+        pa.nulls(n, pa.string()),
+        pa.array(turn_idxs, pa.int32()),
+        pa.array(roles, pa.string()),
+        pa.nulls(n, target.field("ts").type),
+        text,
+    ], names=["conv_id", "turn_idx", "role", "ts", "text"])
+    rb = route_batch(text, roles, turn_idxs, cfg)
+    return assemble_record_batch(batch, rb, cfg, target).to_pylist()

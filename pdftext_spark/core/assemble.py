@@ -1,5 +1,6 @@
-"""Output assembly: plain-text rendering (F7) and structured page dicts
-(P2 projection + F8 + rotation fix-ups).
+"""Text assembly: plain-text rendering (F7), the span-text postprocess
+(F8) and the reading-order sort. The structured page is built as Arrow
+arrays in core/arrow_out.py.
 
 Reference lifecycle: SURVEY.md §3.1-3.2; pdftext/postprocessing.py:95-113,
 pdftext/extraction.py:70-131.
@@ -20,11 +21,6 @@ from pdftext_spark.core.textproc import (
 )
 
 
-def _round_half_even(x: float) -> float:
-    # Python round() — banker's rounding, used by sort keys.
-    return round(x, 0)
-
-
 def sort_order(bboxes: list, tolerance: float = 1.25) -> list[int]:
     """Reading-order permutation (O1, postprocessing.py:76-92): bucket by
     round(y1/tolerance)*tolerance, sort buckets by key, each bucket by x1
@@ -35,12 +31,6 @@ def sort_order(bboxes: list, tolerance: float = 1.25) -> list[int]:
     # order for ties — equivalent to the reference's grouped sort.
     order.sort(key=lambda i: (keys[i], bboxes[i][0]))
     return order
-
-
-def turn_line_ranges(seg: Segmentation, turn: int) -> list[tuple[int, int]]:
-    """(line_lo, line_hi) per block of a turn, in creation order."""
-    lo, hi = int(seg.turn_block_lo[turn]), int(seg.turn_block_hi[turn])
-    return [(int(seg.blocks.line_lo[b]), int(seg.blocks.line_hi[b])) for b in range(lo, hi)]
 
 
 def postprocess_range(seg: Segmentation, a: int, b: int) -> str:
@@ -239,110 +229,3 @@ def plain_text_batch(seg: Segmentation, sort: bool = False,
             text = text[:-1]
         out.append(text.strip())
     return out
-
-
-def _span_dict(seg: Segmentation, span_idx: int, keep_chars: bool,
-               override: Optional[dict] = None) -> dict:
-    """One span as an output dict (P2 + F8, extraction.py:83-90,112-123).
-
-    `override` carries link-split sub-span fields (start/end char offsets,
-    url, char idx range, bbox); split spans lose their script flags,
-    matching the reconstruction at pdf/links.py:203-219.
-    """
-    cb = seg.chars
-    if override is None:
-        a, b = int(seg.spans.start[span_idx]), int(seg.spans.end[span_idx])
-        bbox = seg.spans.bbox[span_idx]
-        url = ""
-        csi = int(seg.spans.char_start_idx[span_idx])
-        cei = int(seg.spans.char_end_idx[span_idx])
-        superscript = bool(seg.spans.superscript[span_idx])
-        subscript = bool(seg.spans.subscript[span_idx])
-    else:
-        a, b = override["start"], override["end"]
-        bbox = override["bbox"]
-        url = override["url"]
-        csi = int(cb.char_idx[a])
-        cei = int(cb.char_idx[b - 1])
-        superscript = False
-        subscript = False
-    # F8: handle_hyphens(postprocess_text(text), keep_hyphens=True)
-    # (extraction.py:85), pass-skipped via the prefix-sum flags
-    text = postprocess_range(seg, a, b)
-    if seg.hy_cum[b] - seg.hy_cum[a]:
-        text = text.replace("\x02", "-\n")
-    name, flags, size, weight = cb.fonts[int(cb.font[a])]
-    d = {
-        "bbox": [float(v) for v in bbox],
-        "text": text,
-        "font": {"name": name, "flags": flags, "size": size, "weight": weight},
-        "char_start_idx": csi,
-        "char_end_idx": cei,
-        "rotation": float(cb.rot[a]),
-        "url": url,
-        "superscript": superscript,
-        "subscript": subscript,
-    }
-    if keep_chars:
-        d["chars"] = [
-            {
-                "bbox": [float(v) for v in cb.boxes[i]],
-                "char": cb.gtext[i:i + 1],
-                "rotation": float(cb.rot[i]),
-                "font": d["font"],
-                "char_idx": int(cb.char_idx[i]),
-            }
-            for i in range(a, b)
-        ]
-    return d
-
-
-def struct_page(seg: Segmentation, turn: int, page_id: int,
-                keep_chars: bool = False, sort: bool = False,
-                span_splits: Optional[dict] = None,
-                sort_tolerance: float = 1.25) -> dict:
-    """One turn as a dictionary_output page (extraction.py:93-131).
-
-    `span_splits` maps span index -> list of override dicts (from the link
-    reconstruction, core/links.py). Rotation fix-up for 90/270 pages swaps
-    width/height and reorders the page bbox (extraction.py:128-130).
-    """
-    dt = seg.chars.turns[turn]
-    blocks_out = []
-    blo, bhi = int(seg.turn_block_lo[turn]), int(seg.turn_block_hi[turn])
-    for b in range(blo, bhi):
-        lines_out = []
-        for li in range(int(seg.blocks.line_lo[b]), int(seg.blocks.line_hi[b])):
-            spans_out = []
-            for si in range(int(seg.lines.start[li]), int(seg.lines.end[li])):
-                if span_splits and si in span_splits:
-                    for ov in span_splits[si]:
-                        spans_out.append(_span_dict(seg, si, keep_chars, ov))
-                else:
-                    spans_out.append(_span_dict(seg, si, keep_chars))
-            lines_out.append({
-                "spans": spans_out,
-                "bbox": [float(v) for v in seg.lines.bbox[li]],
-            })
-        blocks_out.append({
-            "lines": lines_out,
-            "bbox": [float(v) for v in seg.blocks.bbox[b]],
-        })
-    if sort and blocks_out:
-        order = sort_order([blk["bbox"] for blk in blocks_out],
-                           sort_tolerance)
-        blocks_out = [blocks_out[i] for i in order]
-    width, height = dt.page_width, dt.page_height
-    bbox = list(dt.page_bbox)
-    if dt.rotation in (90, 270):
-        width, height = height, width
-        bbox = [bbox[2], bbox[3], bbox[0], bbox[1]]
-    return {
-        "page": page_id,
-        "bbox": bbox,
-        "width": width,
-        "height": height,
-        "rotation": dt.rotation,
-        "blocks": blocks_out,
-        "refs": [],
-    }

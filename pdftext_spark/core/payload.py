@@ -25,7 +25,8 @@ page rotation (chars.py:35). The payload is already top-left-origin, so
 the bottom-left flip (chars.py:26-32) is the generator's job.
 
 Turns whose ``text`` does not parse as a payload (plain prose, HTML) are
-routed elsewhere by the caller; `decode_turn` returns None for them.
+routed elsewhere by the caller; `maybe_parse_payload_raw` returns None
+for them.
 """
 
 from __future__ import annotations
@@ -66,31 +67,12 @@ except ImportError:  # pragma: no cover - env without orjson
     _fastjson = None
 
 
-def maybe_parse_payload(text: str) -> Optional[dict]:
-    if not text or text[0] != "{":
-        return None
-    obj = None
-    if _fastjson is not None:
-        try:
-            obj = _fastjson.loads(text)
-        except ValueError:
-            obj = None  # stricter than stdlib (NaN, >64-bit ints): retry below
-    if obj is None:
-        try:
-            obj = json.loads(text)
-        except ValueError:
-            return None
-    if isinstance(obj, dict) and obj.get("kind") == "chars":
-        return obj
-    return None
-
-
 def maybe_parse_payload_raw(raw) -> Optional[dict]:
-    """`maybe_parse_payload` over a UTF-8 bytes-like view (memoryview of
-    the Arrow string buffer). Skipping the Arrow→str decode AND orjson's
-    internal str→UTF-8 re-encode is ~45% of the scan-and-parse cost on a
-    payload corpus; both parsers decode the same UTF-8 bytes, so the
-    result is identical to the str form on any valid Arrow string."""
+    """The payload dict of one turn's UTF-8 bytes (a memoryview of the
+    Arrow string buffer, or bytes), or None when the turn is not a
+    payload (prose, HTML, other JSON). Parsing the bytes directly skips
+    the Arrow→str decode AND orjson's internal str→UTF-8 re-encode, ~45%
+    of the scan-and-parse cost on a payload corpus."""
     if not raw or raw[0] != 0x7B:  # '{'
         return None
     obj = None
@@ -187,60 +169,16 @@ def decode_turn(obj: dict, quote_loosebox: bool = True) -> DecodedTurn:
     )
 
 
-def prose_to_payload(text: str, page_width: float = 612.0, page_height: float = 792.0,
-                     font_size: float = 11.0, margin: float = 72.0) -> dict:
-    """Degrade-gracefully path for plain-prose turns: synthesize a
-    deterministic monospace layout so extraction is near-identity
-    (SURVEY.md §7.0). Pure arithmetic, vectorizable upstream."""
-    advance = font_size * 0.6
-    line_h = font_size * 1.2
-    max_cols = max(1, int((page_width - 2 * margin) / advance))
-    out_chars: list[str] = []
-    out_boxes: list[float] = []
-    col = 0
-    row = 0
-    for ch in text:
-        if ch == "\n":
-            out_chars.append("\n")
-            x = margin + col * advance
-            y = margin + row * line_h
-            out_boxes.extend([x, y, x, y + line_h])
-            col = 0
-            row += 1
-            continue
-        if col >= max_cols:
-            out_chars.append("\n")
-            x = margin + col * advance
-            y = margin + row * line_h
-            out_boxes.extend([x, y, x, y + line_h])
-            col = 0
-            row += 1
-        x = margin + col * advance
-        y = margin + row * line_h
-        out_chars.append(ch)
-        out_boxes.extend([x, y, x + advance, y + font_size])
-        col += 1
-    return {
-        "kind": "chars",
-        "page_bbox": [0.0, 0.0, page_width, page_height],
-        "rotation": 0,
-        "text": "".join(out_chars),
-        "bbox": out_boxes,
-        "charrot": 0.0,
-        "fonts": [{"name": "Mono", "flags": 0, "size": font_size, "weight": 400}],
-        "font_id": 0,
-    }
-
-
 def prose_to_decoded(text: str, page_width: float = 612.0,
                      page_height: float = 792.0, font_size: float = 11.0,
                      margin: float = 72.0) -> DecodedTurn:
-    """Vectorized fast path for decode_turn(prose_to_payload(text)):
-    builds the DecodedTurn arrays directly with numpy instead of a
-    char-by-char Python loop through a JSON-shaped dict. Verified
-    value-identical to the dict path on fuzzed inputs (same float
-    formulas element-wise; boxes are already corner-normalized and the
-    synthesized page is unrotated, so normalize/rotate are no-ops)."""
+    """Degrade-gracefully path for plain-prose turns: synthesize a
+    deterministic monospace layout so extraction is near-identity
+    (SURVEY.md §7.0), built directly as numpy arrays. The naive oracle's
+    char-by-char `prose_to_payload` (tests/oracle_naive.py) is the
+    reference it is checked against: same float formulas element-wise;
+    boxes are already corner-normalized and the synthesized page is
+    unrotated, so normalize/rotate are no-ops."""
     advance = font_size * 0.6
     line_h = font_size * 1.2
     max_cols = max(1, int((page_width - 2 * margin) / advance))
@@ -315,14 +253,6 @@ def prose_to_decoded(text: str, page_width: float = 612.0,
         font_id=np.full(n, 0, dtype=np.int32),
         fonts=[{"name": "Mono", "flags": 0, "size": font_size, "weight": 400}],
     )
-
-
-def decode_any_turn(text: str, quote_loosebox: bool = True) -> DecodedTurn:
-    """Decode a payload turn, or synthesize a layout for plain prose."""
-    obj = maybe_parse_payload(text)
-    if obj is None:
-        return prose_to_decoded(text if text is not None else "")
-    return decode_turn(obj, quote_loosebox=quote_loosebox)
 
 
 def payload_json(obj: dict) -> str:

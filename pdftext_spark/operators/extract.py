@@ -94,18 +94,10 @@ def link_registrations(transcripts: DataFrame, cfg: ExtractConfig) -> DataFrame:
     target = to_arrow_schema(schema)
 
     def run(batches):
-        from pdftext_spark.core.arrow_out import LINK_DEST_PA
+        from pdftext_spark.core.arrow_out import link_dests_column
         for _, col, rb in _routed(batches, light_cfg):
-            dests = [[] for _ in range(rb.n)]
-            for local, i in enumerate(rb.doc_pos):
-                if local in rb.regs_by_local:
-                    dests[i] = [
-                        {"ord": r[0], "gid": r[1], "dest_page": r[2],
-                         "x": r[3], "y": r[4]}
-                        for r in rb.regs_by_local[local]]
             yield pa.RecordBatch.from_arrays(
-                [col("conv_id"), col("turn_idx"),
-                 pa.array(dests, type=LINK_DEST_PA)],
+                [col("conv_id"), col("turn_idx"), link_dests_column(rb)],
                 schema=target)
 
     cand = (transcripts.select("conv_id", "turn_idx", "role", "text")
@@ -254,25 +246,16 @@ def plain_text_variants(transcripts: DataFrame,
     def run(batches):
         from pdftext_spark.core.assemble import plain_text_batch
         for _, col, rb in _routed(batches, cfg):
-            plain: list = [None] * rb.n
-            srt: list = [None] * rb.n
-            hyp: list = [None] * rb.n
-            for i, o in enumerate(rb.outputs):
-                if o is not None:
-                    plain[i] = srt[i] = hyp[i] = o.text
+            srt = hyp = []  # no doc turns without a segmentation
             if rb.seg is not None:
-                srt_l = plain_text_batch(rb.seg, sort=True,
-                                         sort_tolerance=cfg.sort_tolerance)
-                hyp_l = plain_text_batch(rb.seg, hyphens=True)
-                for local, i in enumerate(rb.doc_pos):
-                    plain[i] = rb.plains[local]
-                    srt[i] = srt_l[local]
-                    hyp[i] = hyp_l[local]
+                srt = plain_text_batch(rb.seg, sort=True,
+                                       sort_tolerance=cfg.sort_tolerance)
+                hyp = plain_text_batch(rb.seg, hyphens=True)
             yield pa.RecordBatch.from_arrays(
                 [col("conv_id"), col("turn_idx"),
-                 pa.array(plain, type=pa.string()),
-                 pa.array(srt, type=pa.string()),
-                 pa.array(hyp, type=pa.string())],
+                 pa.array(rb.row_texts(), type=pa.string()),
+                 pa.array(rb.row_texts(srt), type=pa.string()),
+                 pa.array(rb.row_texts(hyp), type=pa.string())],
                 schema=target)
 
     pruned = transcripts.select("conv_id", "turn_idx", "role", "text")
@@ -307,15 +290,9 @@ def plain_text(transcripts: DataFrame, cfg: ExtractConfig = ExtractConfig()) -> 
 
     def run(batches):
         for _, col, rb in _routed(batches, cfg):
-            out: list = [None] * rb.n
-            for i, o in enumerate(rb.outputs):
-                if o is not None:
-                    out[i] = o.text
-            for local, i in enumerate(rb.doc_pos):
-                out[i] = rb.plains[local]
             yield pa.RecordBatch.from_arrays(
                 [col("conv_id"), col("turn_idx"),
-                 pa.array(out, type=pa.string())],
+                 pa.array(rb.row_texts(), type=pa.string())],
                 schema=target)
 
     pruned = transcripts.select("conv_id", "turn_idx", "role", "text")

@@ -2,9 +2,9 @@
 
 This sandbox has no Iceberg runtime jar (and no network to fetch one), so
 all tests/bench run on the parquet stand-ins in sources/session.py. This
-module is the complete production wiring: when
-``org.apache.iceberg:iceberg-spark-runtime`` is on the classpath, these
-functions replace the parquet seam without touching anything else.
+module holds the production table design: when
+``org.apache.iceberg:iceberg-spark-runtime`` is on the classpath, the DDL
+below and `load_transcripts` replace the parquet seam's input side.
 
 Table design for the 10^12-turn corpus (north_rule):
 
@@ -81,29 +81,5 @@ TBLPROPERTIES (
 """
 
 
-def iceberg_available(spark: SparkSession) -> bool:
-    try:
-        spark._jvm.java.lang.Class.forName(
-            "org.apache.iceberg.spark.source.IcebergSource")
-        return True
-    except Exception:
-        return False
-
-
 def load_transcripts(spark: SparkSession, table: str) -> DataFrame:
     return spark.read.format("iceberg").load(table)
-
-
-def write_extracted(df: DataFrame, table: str) -> None:
-    """Idempotent bucket replacement — the resume-safe write."""
-    df.writeTo(table).overwritePartitions()
-
-
-def incremental_scan(spark: SparkSession, table: str,
-                     from_snapshot: str | None) -> DataFrame:
-    """Snapshot-incremental read: only rows appended since the checkpoint
-    (the Iceberg analog of the manifest in streaming/incremental.py)."""
-    reader = spark.read.format("iceberg")
-    if from_snapshot:
-        reader = reader.option("start-snapshot-id", from_snapshot)
-    return reader.load(table)

@@ -7,9 +7,10 @@ kernel-vs-oracle equality is a meaningful check. Every rule cites the
 reference file:line it reproduces (reference at /root/reference, read-only;
 pdftext itself cannot run here — it needs pypdfium2 + real PDFs).
 
-Payload parsing reuses pdftext_spark.core.payload helpers (the payload
-format is this repo's own fixture contract, not reference semantics);
-everything downstream of decode is implemented natively here.
+It imports nothing from pdftext_spark.core: payload parsing (stdlib json)
+and the monospace layout synthesized for plain-prose turns are written
+here too, although the payload format is this repo's own fixture
+contract rather than reference semantics.
 """
 
 from __future__ import annotations
@@ -18,8 +19,6 @@ import statistics
 import unicodedata
 
 import numpy as np
-
-from pdftext_spark.core.payload import prose_to_payload
 
 SPACES = {" ", "￾", "﻿", "\xa0"}
 LINE_BREAKS = {"\n", "\r"}
@@ -372,6 +371,51 @@ def _parse_payload_stdlib(text):
     if isinstance(obj, dict) and obj.get("kind") == "chars":
         return obj
     return None
+
+
+def prose_to_payload(text, page_width=612.0, page_height=792.0,
+                     font_size=11.0, margin=72.0):
+    """Plain-prose turn → a payload dict with a deterministic monospace
+    layout (SURVEY.md §7.0), one char at a time: a newline char ends its
+    row, and a row that reaches max_cols wraps by inserting one."""
+    advance = font_size * 0.6
+    line_h = font_size * 1.2
+    max_cols = max(1, int((page_width - 2 * margin) / advance))
+    out_chars: list[str] = []
+    out_boxes: list[float] = []
+    col = 0
+    row = 0
+    for ch in text:
+        if ch == "\n":
+            out_chars.append("\n")
+            x = margin + col * advance
+            y = margin + row * line_h
+            out_boxes.extend([x, y, x, y + line_h])
+            col = 0
+            row += 1
+            continue
+        if col >= max_cols:
+            out_chars.append("\n")
+            x = margin + col * advance
+            y = margin + row * line_h
+            out_boxes.extend([x, y, x, y + line_h])
+            col = 0
+            row += 1
+        x = margin + col * advance
+        y = margin + row * line_h
+        out_chars.append(ch)
+        out_boxes.extend([x, y, x + advance, y + font_size])
+        col += 1
+    return {
+        "kind": "chars",
+        "page_bbox": [0.0, 0.0, page_width, page_height],
+        "rotation": 0,
+        "text": "".join(out_chars),
+        "bbox": out_boxes,
+        "charrot": 0.0,
+        "fonts": [{"name": "Mono", "flags": 0, "size": font_size, "weight": 400}],
+        "font_id": 0,
+    }
 
 
 def build_page(payload_text, page_idx, quote_loosebox=True, sht=0.7, ldt=0.1):

@@ -156,3 +156,15 @@ def test_run_rejects_out_of_range_pages():
     with pytest.raises(IndexError):
         paginated_plain_text_output(payloads, page_range=[2])
     assert paginated_plain_text_output(payloads, page_range=[1]) == ["world"]
+
+
+def test_dictionary_output_keep_chars_reference_shape(fixture_rows):
+    """keep_chars=True pages equal the oracle's with no normalization:
+    every char carries its span's font, as in pdftext's dict output."""
+    payloads = _conv_payloads(fixture_rows)
+    pages = dictionary_output(payloads, keep_chars=True)
+    exp = oracle_dictionary(payloads, keep_chars=True)
+    assert all("font" in c for p in pages for b in p["blocks"]
+               for ln in b["lines"] for sp in ln["spans"] for c in sp["chars"])
+    from tests.test_core_parity import deep_eq
+    assert deep_eq(pages, exp) is None

@@ -6,8 +6,9 @@ and span equality under stable ordering, for every flag combination.
 
 import pytest
 
+from pdftext_spark.api_compat import _reference_page
 from pdftext_spark.config import ExtractConfig
-from pdftext_spark.core.api import process_batch
+from pdftext_spark.core.arrow_out import extract_rows
 from pdftext_spark.core.links import resolve_conversation_refs, rewrite_page_urls
 from tests.oracle_naive import oracle_dictionary, oracle_plain, oracle_tables
 
@@ -41,34 +42,22 @@ def _doc_turns(fixture_rows):
             yield cid, [t["text"] for t in doc], [t["turn_idx"] for t in doc]
 
 
-def _run_kernel(texts, ids, **flags):
-    cfg = ExtractConfig(keep_chars=True, **flags)
-    outs = process_batch(texts, ["user"] * len(texts), ids, cfg)
-    regs = [(ids[i], *r) for i, o in enumerate(outs) for r in o.registrations]
+def kernel_rows(texts, ids, cfg):
+    """EXTRACTED rows from the Arrow kernel path, links resolved across
+    the turns and pages in the oracle's (pdftext's) dict shape."""
+    rows = extract_rows(texts, ["user"] * len(texts), ids, cfg)
+    regs = [(row["turn_idx"], *d.values())  # (ord, gid, dest_page, x, y)
+            for row in rows for d in row["link_dests"]]
     url_map, refs_by_page = resolve_conversation_refs(regs)
-    for o in outs:
-        rewrite_page_urls(o.page, url_map, refs_by_page)
-    return outs
+    for row in rows:
+        if row["page"] is not None:
+            rewrite_page_urls(row["page"], url_map, refs_by_page)
+            _reference_page(row["page"])
+    return rows
 
 
-def _norm_oracle_page(page):
-    """Align oracle page dicts with kernel output shape: kernel char dicts
-    omit the font (identical to the span font by construction)."""
-    for blk in page["blocks"]:
-        for ln in blk["lines"]:
-            for sp in ln["spans"]:
-                for c in sp.get("chars", []):
-                    c.pop("font", None)
-    return page
-
-
-def _norm_kernel_page(page):
-    for blk in page["blocks"]:
-        for ln in blk["lines"]:
-            for sp in ln["spans"]:
-                for c in sp.get("chars", []):
-                    c.pop("font", None)
-    return page
+def _run_kernel(texts, ids, **flags):
+    return kernel_rows(texts, ids, ExtractConfig(keep_chars=True, **flags))
 
 
 @pytest.mark.parametrize("flags", [{}, {"sort": True}, {"hyphens": True},
@@ -76,43 +65,43 @@ def _norm_kernel_page(page):
 def test_plain_text_parity(fixture_rows, flags):
     n = 0
     for cid, texts, ids in _doc_turns(fixture_rows):
-        outs = process_batch(texts, ["user"] * len(texts), ids,
-                             ExtractConfig(emit_struct=False, emit_tables=False,
-                                           disable_links=True, **flags))
+        rows = extract_rows(texts, ["user"] * len(texts), ids,
+                            ExtractConfig(emit_struct=False, emit_tables=False,
+                                          disable_links=True, **flags))
         exp = oracle_plain(texts, page_ids=ids, **flags)
-        for o, e in zip(outs, exp):
-            assert o.text == e, cid
+        for row, e in zip(rows, exp):
+            assert row["text"] == e, cid
             n += 1
     assert n > 50
 
 
 def test_struct_parity_with_links(fixture_rows):
     for cid, texts, ids in _doc_turns(fixture_rows):
-        outs = _run_kernel(texts, ids)
+        rows = _run_kernel(texts, ids)
         exp = oracle_dictionary(texts, keep_chars=True, page_ids=ids)
-        for o, e in zip(outs, exp):
-            r = deep_eq(_norm_kernel_page(o.page), _norm_oracle_page(e))
+        for row, e in zip(rows, exp):
+            r = deep_eq(row["page"], e)
             assert r is None, f"{cid}: {r}"
 
 
 def test_struct_parity_sorted(fixture_rows):
     for cid, texts, ids in _doc_turns(fixture_rows):
-        outs = _run_kernel(texts, ids, sort=True)
+        rows = _run_kernel(texts, ids, sort=True)
         exp = oracle_dictionary(texts, keep_chars=True, sort=True, page_ids=ids)
-        for o, e in zip(outs, exp):
-            r = deep_eq(_norm_kernel_page(o.page), _norm_oracle_page(e))
+        for row, e in zip(rows, exp):
+            r = deep_eq(row["page"], e)
             assert r is None, f"{cid}: {r}"
 
 
 def test_tables_parity(fixture_rows):
     n_tables = 0
     for cid, texts, ids in _doc_turns(fixture_rows):
-        outs = _run_kernel(texts, ids)
+        rows = _run_kernel(texts, ids)
         exp = oracle_tables(texts, page_ids=ids)
-        for o, e in zip(outs, exp):
-            r = deep_eq(o.tables, e)
+        for row, e in zip(rows, exp):
+            r = deep_eq(row["tables"], e)
             assert r is None, f"{cid}: {r}"
-            n_tables += len(o.tables)
+            n_tables += len(row["tables"])
     assert n_tables > 0
 
 
@@ -123,14 +112,14 @@ def test_quote_loosebox_toggle(fixture_rows):
     for cid, texts, ids in _doc_turns(fixture_rows):
         cfg = ExtractConfig(quote_loosebox=False, emit_struct=False,
                             emit_tables=False, disable_links=True)
-        outs = process_batch(texts, ["user"] * len(texts), ids, cfg)
+        rows = extract_rows(texts, ["user"] * len(texts), ids, cfg)
         exp = oracle_plain(texts, page_ids=ids)  # loosebox default True
         exp_tight = [t for t in exp]
         from tests.oracle_naive import build_page, merge_text_naive
         exp_tight = [merge_text_naive(build_page(t, i, quote_loosebox=False)).strip()
                      for t, i in zip(texts, ids)]
-        for o, e in zip(outs, exp_tight):
-            assert o.text == e
+        for row, e in zip(rows, exp_tight):
+            assert row["text"] == e
         any_diff = any_diff or exp != exp_tight
     # the fixture injects quotes with tight boxes, so the toggle must matter
     assert any_diff
@@ -151,12 +140,12 @@ def test_superscript_facts(fixture_rows):
             continue
         texts = [t["text"] for t in doc]
         ids = [t["turn_idx"] for t in doc]
-        outs = _run_kernel(texts, ids)
-        for t, o in zip(doc, outs):
+        rows = _run_kernel(texts, ids)
+        for t, row in zip(doc, rows):
             expected = sups.get((cid, t["turn_idx"]))
             if not expected:
                 continue
-            flagged = [sp["text"] for b in o.page["blocks"] for l in b["lines"]
+            flagged = [sp["text"] for b in row["page"]["blocks"] for l in b["lines"]
                        for sp in l["spans"] if sp["superscript"]]
             for se in expected:
                 assert se in flagged, (cid, t["turn_idx"], se, flagged)
@@ -174,13 +163,13 @@ def test_table_facts(fixture_rows):
         doc = [t for t in turns if t["role"] != "tool"]
         if not doc:
             continue
-        outs = _run_kernel([t["text"] for t in doc], [t["turn_idx"] for t in doc])
-        for t, o in zip(doc, outs):
+        rows = _run_kernel([t["text"] for t in doc], [t["turn_idx"] for t in doc])
+        for t, row in zip(doc, rows):
             f = facts.get((cid, t["turn_idx"]))
             if not f:
                 continue
-            assert len(o.tables) == f["n_tables"]
-            cells = o.tables[0]
+            assert len(row["tables"]) == f["n_tables"]
+            cells = row["tables"][0]
             assert len(cells) == f["n_cells"], (cid, t["turn_idx"])
             assert cells[-1]["text"].strip() == f["last_text"]
             for c in cells:

@@ -10,14 +10,21 @@ import json
 import os
 
 import hypothesis.strategies as st
+import pytest
 from hypothesis import HealthCheck, given, settings
 
 from pdftext_spark.config import ExtractConfig
-from pdftext_spark.core.api import process_batch
-from pdftext_spark.core.links import resolve_conversation_refs, rewrite_page_urls
 from pdftext_spark.core.textproc import handle_hyphens, postprocess_text
-from tests.oracle_naive import hyphens_text, oracle_dictionary, oracle_plain, pp_text
-from tests.test_core_parity import deep_eq
+from tests.oracle_naive import (
+    Registry,
+    build_page,
+    hyphens_text,
+    merge_links_naive,
+    oracle_dictionary,
+    oracle_plain,
+    pp_text,
+)
+from tests.test_core_parity import deep_eq, kernel_rows
 
 # HYP_EXAMPLES=2000 for a heavy pre-release shake-out run
 SETTINGS = dict(max_examples=int(os.environ.get("HYP_EXAMPLES", "150")),
@@ -87,28 +94,54 @@ def _payload(chars, rotation, links):
     return json.dumps(obj, ensure_ascii=False)
 
 
+def _oracle_registrations(text, page_id):
+    """(dest_page, x, y) of every link the oracle registers on one page,
+    in registration order."""
+    calls = []
+
+    class Recording(Registry):
+        def add(self, page, coord):
+            calls.append((page, *coord))
+            return super().add(page, coord)
+
+    merge_links_naive(build_page(text, page_id), Recording())
+    return calls
+
+
+@pytest.mark.parametrize("keep_chars", [False, True], ids=["spans", "chars"])
+@pytest.mark.parametrize("sort", [False, True], ids=["unsorted", "sorted"])
 @given(texts=st.lists(_payload_st, min_size=1, max_size=4))
 @settings(**SETTINGS)
-def test_plain_and_struct_parity(texts):
+def test_plain_and_struct_parity(texts, sort, keep_chars):
+    """Plain text, pages (link splits, refs, keep_chars char lists, block
+    sort), link registrations and the per-turn counts of the Arrow kernel
+    path against the oracle."""
     ids = list(range(len(texts)))
-    outs = process_batch(texts, ["user"] * len(texts), ids,
-                         ExtractConfig(keep_chars=True))
-    regs = [(ids[i], *r) for i, o in enumerate(outs) for r in o.registrations]
-    url_map, refs_by_page = resolve_conversation_refs(regs)
-    for o in outs:
-        rewrite_page_urls(o.page, url_map, refs_by_page)
-    exp_plain = oracle_plain(texts, page_ids=ids)
-    exp_pages = oracle_dictionary(texts, keep_chars=True, page_ids=ids)
-    for o, ep, eg in zip(outs, exp_plain, exp_pages):
-        assert o.text == ep
-        for page in (eg, o.page):
-            for blk in page["blocks"]:
-                for ln in blk["lines"]:
-                    for sp in ln["spans"]:
-                        for c in sp.get("chars", []):
-                            c.pop("font", None)
-        r = deep_eq(o.page, eg)
+    rows = kernel_rows(texts, ids,
+                       ExtractConfig(keep_chars=keep_chars, sort=sort))
+    exp_plain = oracle_plain(texts, sort=sort, page_ids=ids)
+    exp_pages = oracle_dictionary(texts, sort=sort, keep_chars=keep_chars,
+                                  page_ids=ids)
+    for row, text, ep, eg in zip(rows, texts, exp_plain, exp_pages):
+        assert row["text"] == ep
+        r = deep_eq(row["page"], eg)
         assert r is None, r
+        # registrations: the oracle's in order; gid numbers the distinct
+        # (dest_page, x, y) of the turn, ord rises with the link index
+        gids: dict = {}
+        exp_dests = [(gids.setdefault(c, len(gids)), *c)
+                     for c in _oracle_registrations(text, row["turn_idx"])]
+        dests = row["link_dests"]
+        assert [(d["gid"], d["dest_page"], d["x"], d["y"])
+                for d in dests] == exp_dests
+        assert all(a["ord"] < b["ord"] for a, b in zip(dests, dests[1:]))
+        # counts are taken before link splits: the oracle's raw page
+        raw = build_page(text, row["turn_idx"])
+        spans = [sp for b in raw["blocks"] for ln in b["lines"]
+                 for sp in ln["spans"]]
+        assert row["n_blocks"] == len(raw["blocks"])
+        assert row["n_spans"] == len(spans)
+        assert row["n_chars"] == sum(len(sp["chars"]) for sp in spans)
 
 
 _table_payload_st = st.builds(
@@ -136,11 +169,10 @@ def _table_payload(chars, rotation):
 def test_table_clustering_parity(texts):
     from tests.oracle_naive import oracle_tables
     ids = list(range(len(texts)))
-    outs = process_batch(texts, ["user"] * len(texts), ids,
-                         ExtractConfig(keep_chars=True))
+    rows = kernel_rows(texts, ids, ExtractConfig(keep_chars=True))
     exp = oracle_tables(texts, page_ids=ids)
-    for o, e in zip(outs, exp):
-        r = deep_eq(o.tables, e)
+    for row, e in zip(rows, exp):
+        r = deep_eq(row["tables"], e)
         assert r is None, r
 
 
@@ -172,18 +204,12 @@ def test_tbox_loosebox_parity(items):
     for ql in (True, False):
         texts = [t for t, _ in items]
         ids = list(range(len(texts)))
-        outs = process_batch(texts, ["user"] * len(texts), ids,
-                             ExtractConfig(keep_chars=True, quote_loosebox=ql))
+        rows = kernel_rows(texts, ids,
+                           ExtractConfig(keep_chars=True, quote_loosebox=ql))
         exp_pages = oracle_dictionary(texts, keep_chars=True,
                                       quote_loosebox=ql, page_ids=ids)
-        for o, eg in zip(outs, exp_pages):
-            for page in (eg, o.page):
-                for blk in page["blocks"]:
-                    for ln in blk["lines"]:
-                        for sp in ln["spans"]:
-                            for c in sp.get("chars", []):
-                                c.pop("font", None)
-            r = deep_eq(o.page, eg)
+        for row, eg in zip(rows, exp_pages):
+            r = deep_eq(row["page"], eg)
             assert r is None, r
 
 
@@ -215,14 +241,13 @@ def test_table_dynamic_gap_thresh_parity():
         obj["img_size"] = [pw * 1.5, ph * 1.5]
         texts.append(json.dumps(obj))
     ids = list(range(len(texts)))
-    outs = process_batch(texts, ["user"] * len(texts), ids,
-                         ExtractConfig(keep_chars=True))
+    rows = kernel_rows(texts, ids, ExtractConfig(keep_chars=True))
     exp = oracle_tables(texts, page_ids=ids)
     n_cells = 0
-    for o, e in zip(outs, exp):
-        r = deep_eq(o.tables, e)
+    for row, e in zip(rows, exp):
+        r = deep_eq(row["tables"], e)
         assert r is None, r
-        n_cells += sum(len(t) for t in o.tables)
+        n_cells += sum(len(t) for t in row["tables"])
     assert n_cells > 4  # the split actually happened somewhere
 
 
@@ -237,64 +262,6 @@ def test_postprocess_property(s):
 @settings(**SETTINGS)
 def test_hyphens_property(s, keep):
     assert handle_hyphens(s, keep) == hyphens_text(s, keep)
-
-
-def _arrow_rows(texts, cfg):
-    """Run the Arrow fast path (route_batch + assemble_record_batch) on an
-    in-process RecordBatch — the exact code Spark's mapInArrow executes —
-    and return python rows."""
-    import pyarrow as pa
-    from pyspark.sql.pandas.types import to_arrow_schema
-
-    from pdftext_spark.core.api import route_batch
-    from pdftext_spark.core.arrow_out import assemble_record_batch
-    from pdftext_spark.operators.schema import EXTRACTED
-
-    target = to_arrow_schema(EXTRACTED)
-    n = len(texts)
-    ids = list(range(n))
-    batch = pa.RecordBatch.from_arrays([
-        pa.array([f"c{i}" for i in ids]),
-        pa.array(ids, pa.int32()),
-        pa.array(["user"] * n),
-        pa.array(texts),
-        pa.array([0] * n, target.field("ts").type),
-    ], names=["conv_id", "turn_idx", "role", "text", "ts"])
-    rb = route_batch(texts, ["user"] * n, ids, cfg)
-    return assemble_record_batch(batch, rb, cfg, target).to_pylist()
-
-
-@given(texts=st.lists(_payload_st, min_size=1, max_size=4),
-       keep_chars=st.booleans(), sort=st.booleans())
-@settings(**SETTINGS)
-def test_arrow_path_equals_dict_path(texts, keep_chars, sort):
-    """The columnar Arrow assembly must be value-identical to the dict
-    kernel for every flag combination, including link splits and
-    keep_chars char gathers, on adversarial payloads."""
-    cfg = ExtractConfig(keep_chars=keep_chars, sort=sort)
-    rows = _arrow_rows(texts, cfg)
-    outs = process_batch(texts, ["user"] * len(texts),
-                         list(range(len(texts))), cfg)
-    assert len(rows) == len(outs)
-    for row, o in zip(rows, outs):
-        assert row["text"] == o.text
-        assert row["n_chars"] == o.n_chars
-        assert row["n_spans"] == o.n_spans
-        dests = [{"ord": r[0], "gid": r[1], "dest_page": r[2],
-                  "x": r[3], "y": r[4]} for r in o.registrations]
-        assert deep_eq(row["link_dests"], dests) is None
-        exp_page = o.page
-        if exp_page is not None:
-            for blk in exp_page["blocks"]:
-                for ln in blk["lines"]:
-                    for sp in ln["spans"]:
-                        if keep_chars:
-                            for c in sp.get("chars", []):
-                                c.pop("font", None)
-                        else:
-                            sp.setdefault("chars", None)
-        r = deep_eq(row["page"], exp_page)
-        assert r is None, r
 
 
 @given(s=st.lists(st.sampled_from(

@@ -184,7 +184,7 @@ def test_word_dedup_signed_zero_rotation_parity():
     value-keyed implementations collapsed them (found in round-3 review);
     the bit-pattern key keeps both, matching the naive oracle."""
     from pdftext_spark.config import ExtractConfig
-    from pdftext_spark.core.api import process_batch
+    from pdftext_spark.core.arrow_out import extract_rows
     from pdftext_spark.core.payload import payload_json
     from tests.oracle_naive import oracle_plain
 
@@ -202,16 +202,16 @@ def test_word_dedup_signed_zero_rotation_parity():
         "font_id": 0,
     }
     tx = payload_json(payload)
-    outs = process_batch([tx], ["user"], [0], ExtractConfig())
+    rows = extract_rows([tx], ["user"], [0], ExtractConfig())
     exp = oracle_plain([tx])
-    assert outs[0].text == exp[0]
+    assert rows[0]["text"] == exp[0]
     assert "ab ab" in exp[0]  # the oracle really keeps both words
     # and a true duplicate (same-signed rotation) still dedups on both
     dup = dict(payload, charrot=[0.0] * 6)
     tx2 = payload_json(dup)
-    outs2 = process_batch([tx2], ["user"], [0], ExtractConfig())
+    rows2 = extract_rows([tx2], ["user"], [0], ExtractConfig())
     exp2 = oracle_plain([tx2])
-    assert outs2[0].text == exp2[0]
+    assert rows2[0]["text"] == exp2[0]
     assert "ab ab" not in exp2[0]
 
 
@@ -247,8 +247,9 @@ def test_malformed_payload_isolated_per_turn():
     import json
 
     from pdftext_spark.config import ExtractConfig
-    from pdftext_spark.core.api import process_batch
-    from pdftext_spark.core.payload import payload_json, prose_to_payload
+    from pdftext_spark.core.arrow_out import extract_rows
+    from pdftext_spark.core.payload import payload_json
+    from tests.oracle_naive import prose_to_payload
 
     good = payload_json(prose_to_payload("hello world"))
     bad_font = json.dumps({
@@ -261,11 +262,11 @@ def test_malformed_payload_isolated_per_turn():
         "text": "ab", "bbox": [1, 1, 2, 2, 2, 1, 3, 2], "charrot": [0.0],
         "fonts": [{"name": "A", "flags": 0, "size": 1.0, "weight": 1}],
         "font_id": 0})
-    outs = process_batch([good, bad_font, bad_rot], ["user"] * 3,
-                         [0, 1, 2], ExtractConfig())
-    assert outs[0].text == "hello world"
-    assert outs[1].error and "font_id" in outs[1].error
-    assert outs[2].error and "charrot" in outs[2].error
+    rows = extract_rows([good, bad_font, bad_rot], ["user"] * 3,
+                        [0, 1, 2], ExtractConfig())
+    assert rows[0]["text"] == "hello world"
+    assert rows[1]["error"] and "font_id" in rows[1]["error"]
+    assert rows[2]["error"] and "charrot" in rows[2]["error"]
 
 
 def test_word_dedup_fstring_collision_quirk():
@@ -277,7 +278,7 @@ def test_word_dedup_fstring_collision_quirk():
     round-3 core review. Words are split by FONT changes here so the
     colliding texts can coexist in one turn without terminator chars."""
     from pdftext_spark.config import ExtractConfig
-    from pdftext_spark.core.api import process_batch
+    from pdftext_spark.core.arrow_out import extract_rows
     from pdftext_spark.core.payload import payload_json
     from tests.oracle_naive import oracle_plain
 
@@ -291,18 +292,18 @@ def test_word_dedup_fstring_collision_quirk():
         "font_id": [0, 1, 0, 0, 1],
     }
     tx = payload_json(payload)
-    outs = process_batch([tx], ["user"], [0], ExtractConfig())
+    rows = extract_rows([tx], ["user"], [0], ExtractConfig())
     exp = oracle_plain([tx])
-    assert outs[0].text == exp[0]
+    assert rows[0]["text"] == exp[0]
     assert "b-" not in exp[0]  # the oracle really collide-drops it
     # single-capable-class control: same shape but rotations all +0.0
     # (only the text class can dash) — no collision, both words kept,
     # and the fast int-key path must agree with the oracle
     ctl = dict(payload, charrot=[0.0] * 5)
     tx2 = payload_json(ctl)
-    outs2 = process_batch([tx2], ["user"], [0], ExtractConfig())
+    rows2 = extract_rows([tx2], ["user"], [0], ExtractConfig())
     exp2 = oracle_plain([tx2])
-    assert outs2[0].text == exp2[0]
+    assert rows2[0]["text"] == exp2[0]
     assert "b-" in exp2[0]
 
 

@@ -60,12 +60,13 @@ def test_substr_exact_equals_sa_kernel(spark, tmp_path):
         assert got == exp, (case, sorted(got), sorted(exp))
 
 
-def test_route_batch_arrow_equals_list():
-    """The zero-copy Arrow text path of route_batch must be output-
-    identical to the list[str] path on every routing outcome: nulls,
-    empties, invalid JSON, valid-JSON-non-payload, malformed payloads
-    (the per-turn error channel), prose, HTML, and real payloads —
-    across string/large_string/sliced/chunked array layouts."""
+def test_route_batch_arrow_layouts_agree():
+    """route_batch's zero-copy buffer walk must give the same output for
+    every Arrow layout of the same texts — string, large_string, sliced
+    (non-zero offset) and chunked (split inside and outside the payload
+    rows) — on every routing outcome: nulls, empties, invalid JSON,
+    valid-JSON-non-payload, malformed payloads (the per-turn error
+    channel), prose, HTML, and real payloads."""
     import numpy as np
     import pyarrow as pa
 
@@ -78,7 +79,7 @@ def test_route_batch_arrow_equals_list():
              '"bbox":[1,2,3,4,5,6,7,8],"charrot":[0.0]}',
              '{"kind":"chars","page_bbox":[0,0,100,100],"text":"hi",'
              '"bbox":[1,2,3,4,5,6,7,8]}',
-             # illegal rotation: both paths must emit rotate_boxes'
+             # illegal rotation: every layout must emit rotate_boxes'
              # message from THIS turn's error channel (the deferred-
              # geometry fast path validates at decode time)
              '{"kind":"chars","page_bbox":[0,0,10,10],"rotation":45,'
@@ -94,7 +95,7 @@ def test_route_batch_arrow_equals_list():
              "user", "user", "user", "tool", "tool"]
     tix = list(range(len(texts)))
     cfg = ExtractConfig()
-    ref = route_batch(texts, roles, tix, cfg)
+    ref = route_batch(pa.array(texts, type=pa.string()), roles, tix, cfg)
     layouts = [
         pa.array(texts, type=pa.string()),
         pa.array(texts, type=pa.large_string()),
@@ -119,7 +120,8 @@ def test_route_batch_arrow_equals_list():
 def test_route_batch_rejects_other_arrow_string_types():
     """_arrow_text_view reads the offsets+data layout of string and
     large_string arrays only; a string_view or dictionary array must fail
-    loudly instead of being parsed as garbage."""
+    loudly instead of being parsed as garbage, and so must a Python list
+    (callers holding one wrap it with pa.array or use extract_rows)."""
     import pyarrow as pa
     import pytest
 
@@ -129,7 +131,8 @@ def test_route_batch_rejects_other_arrow_string_types():
              '"bbox":[1,2,3,4,5,6,7,8]}', "plain prose"]
     for arr in (pa.array(texts, type=pa.string_view()),
                 pa.array(texts).dictionary_encode(),
-                pa.chunked_array([pa.array(texts).dictionary_encode()])):
+                pa.chunked_array([pa.array(texts).dictionary_encode()]),
+                texts):
         with pytest.raises(TypeError, match="string"):
             route_batch(arr, ["user", "user"], [0, 1])
 
