@@ -41,18 +41,14 @@ class ExtractConfig:
 
     # --- scale knobs ---
     # Number of partitions for the salted repartition of the heavy scan.
+    # The salt itself has no switch: operators/extract._apply_salt probes
+    # the source partition count (one JVM-side physical plan build, no
+    # job) and repartitions on (conv_id, turn_idx) only coarse inputs.
     # At 100 TB this would be sized to ~128 MB of payload per task; in the
     # sandbox we default to 2x local cores.
     partitions: int = field(
         default_factory=lambda: int(os.environ.get("PDFTEXT_SPARK_PARTITIONS", "0"))
     )
-    # Anti-skew salting of the input before the kernel:
-    #   "auto"   — probe the source partition count (one JVM-side physical
-    #              plan build, no job) and repartition only coarse inputs;
-    #   "always" — unconditionally repartition on (conv_id, turn_idx);
-    #   "never"  — trust the source (right for file scans, which split by
-    #              bytes and are balanced by construction).
-    salt: str = "auto"
     # Hash-bucket count for checkpoint/resume manifests.
     resume_buckets: int = 64
 

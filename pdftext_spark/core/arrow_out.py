@@ -22,7 +22,7 @@ import pyarrow.compute as pc
 
 from pdftext_spark.config import ExtractConfig
 from pdftext_spark.core.api import RoutedBatch, route_batch
-from pdftext_spark.core.assemble import postprocess_ranges, sort_order
+from pdftext_spark.core.assemble import postprocess_ranges, turn_block_orders
 
 CHAR_PA = pa.struct([
     ("bbox", pa.list_(pa.float64())),
@@ -143,8 +143,8 @@ def build_page_array(rb: RoutedBatch, cfg: ExtractConfig) -> pa.StructArray:
             sub_out[row] = False
 
     # span texts (F8): one global postprocess pass + a slice per output
-    # span (postprocess_range per span walked the pass machinery 10x+
-    # per line); output rows are contiguous ranges, so masking \r\n
+    # span (postprocessing each span on its own walked the pass machinery
+    # 10x+ per line); output rows are contiguous ranges, so masking \r\n
     # collapse at their starts makes every slice exact
     texts = postprocess_ranges(seg, start_out, end_out, hyphen_sentinel=True)
 
@@ -153,15 +153,9 @@ def build_page_array(rb: RoutedBatch, cfg: ExtractConfig) -> pa.StructArray:
         else np.zeros(0, dtype=np.int64)
     block_line_counts = blocks.line_hi - blocks.line_lo
     if cfg.sort:
-        block_perm_parts = []
-        for t in range(T):
-            blo, bhi = int(seg.turn_block_lo[t]), int(seg.turn_block_hi[t])
-            if bhi > blo:
-                order = sort_order([blocks.bbox[b] for b in range(blo, bhi)],
-                                   cfg.sort_tolerance)
-                block_perm_parts.append(np.asarray(order, dtype=np.int64) + blo)
-        block_perm = (np.concatenate(block_perm_parts) if block_perm_parts
-                      else np.zeros(0, dtype=np.int64))
+        block_perm = np.asarray(
+            [b for order in turn_block_orders(seg, cfg.sort_tolerance)
+             for b in order], dtype=np.int64)
         line_perm = np.concatenate(
             [np.arange(blocks.line_lo[b], blocks.line_hi[b]) for b in block_perm]
         ) if len(block_perm) else np.zeros(0, dtype=np.int64)

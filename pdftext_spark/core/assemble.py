@@ -15,7 +15,6 @@ import numpy as np
 from pdftext_spark.core.segment import Segmentation
 from pdftext_spark.core.textproc import (
     LIGATURE_MAP,
-    _cc_delete_re,
     _specials_table,
     handle_hyphens,
 )
@@ -33,60 +32,25 @@ def sort_order(bboxes: list, tolerance: float = 1.25) -> list[int]:
     return order
 
 
-def postprocess_range(seg: Segmentation, a: int, b: int) -> str:
-    """postprocess_text over chars [a, b) of the post-dedup global string,
-    skipping passes the prefix-sum flags prove unobservable (the common
-    pure-ASCII case touches no regex or translate machinery)."""
-    text = seg.chars.gtext[a:b]
-    if seg.tr_cum[b] - seg.tr_cum[a]:
-        text = text.replace("\r\n", "\n").translate(_specials_table())
-    if seg.cc_cum[b] - seg.cc_cum[a]:
-        text = _cc_delete_re().sub("", text)
-    return text
-
-
-def merge_text_turn(seg: Segmentation, turn: int, sort: bool = False,
-                    hyphens: bool = False,
-                    sort_tolerance: float = 1.25) -> str:
-    """F7 — plain-text render of one turn (postprocessing.py:95-113).
-
-    Per line: concat spans, postprocess, rstrip + newline; per block:
-    rstrip + double newline; whole page through handle_hyphens.
-    """
-    blo, bhi = int(seg.turn_block_lo[turn]), int(seg.turn_block_hi[turn])
-    block_ids = list(range(blo, bhi))
-    if sort and block_ids:
-        bboxes = [seg.blocks.bbox[b] for b in block_ids]
-        block_ids = [block_ids[i] for i in sort_order(bboxes, sort_tolerance)]
-    line_lo = seg.blocks.line_lo
-    line_hi = seg.blocks.line_hi
-    sp_start = seg.spans.start
-    sp_end = seg.spans.end
-    ln_start = seg.lines.start
-    ln_end = seg.lines.end
-    parts: list[str] = []
-    for b in block_ids:
-        lines_out: list[str] = []
-        for li in range(int(line_lo[b]), int(line_hi[b])):
-            a = int(sp_start[ln_start[li]])
-            z = int(sp_end[ln_end[li] - 1])
-            lines_out.append(postprocess_range(seg, a, z).rstrip() + "\n")
-        parts.append("".join(lines_out).rstrip() + "\n\n")
-    text = "".join(parts)
-    # hyphen pass: skip the stateful scan when the turn has no \x02 at all
-    # (keep=False still drops the final char — postprocessing.py:39)
-    clo, chi = int(seg.turn_char_lo[turn]), int(seg.turn_char_hi[turn])
-    if seg.hy_cum[chi] - seg.hy_cum[clo] == 0:
-        return text if hyphens else text[:-1]
-    return handle_hyphens(text, keep_hyphens=hyphens)
+def turn_block_orders(seg: Segmentation, tolerance: float) -> list[list[int]]:
+    """Each turn's global block ids in O1 reading order: sort_order over
+    the turn's block bboxes (postprocessing.py:76-92, applied per page by
+    merge_text and by the sorted dictionary output)."""
+    orders = []
+    for t in range(seg.n_turns):
+        blo, bhi = int(seg.turn_block_lo[t]), int(seg.turn_block_hi[t])
+        order = sort_order([seg.blocks.bbox[b] for b in range(blo, bhi)],
+                           tolerance)
+        orders.append([blo + i for i in order])
+    return orders
 
 
 def postprocess_global(seg: Segmentation, range_starts) -> tuple[str, Optional[np.ndarray]]:
     """The whole replace+translate+control-filter pass applied ONCE over
     the post-dedup global string, such that ``g_full[off[a]:off[b]]``
-    equals ``postprocess_range(seg, a, b)`` for every range whose
-    endpoints lie on ``range_starts`` boundaries (off=None means offsets
-    are the identity).
+    equals postprocess_text (postprocessing.py) over the global chars
+    [a, b) for every range whose endpoints lie on ``range_starts``
+    boundaries (off=None means offsets are the identity).
 
     1. 1:1 maps (spaces/line-breaks/tabs) as a vectorized codepoint
        remap + one utf-32 decode (str.translate with a dict table walks
@@ -96,9 +60,10 @@ def postprocess_global(seg: Segmentation, range_starts) -> tuple[str, Optional[n
        control-char DELETIONS — spliced in at their (few) positions,
        with per-char output lengths cumsum'd into an offset map so every
        range is a plain slice.
-    postprocess_range slices FIRST, so a \\r\\n pair straddling a range
-    boundary keeps its \\r as "\\n" — pair collapse is therefore masked
-    where the \\n is a range start, making the slice exact there too.
+    The reference postprocesses each range after slicing it, so a \\r\\n
+    pair straddling a range boundary keeps its \\r as "\\n" — pair
+    collapse is therefore masked where the \\n is a range start, making
+    the slice exact there too.
     The deletion mask is cc_flag MINUS the specials-mapped codepoints:
     _cc_delete_re carves those out of its char class (they translate to
     spaces instead of being dropped) while the batch flag deliberately
@@ -152,7 +117,7 @@ def postprocess_global(seg: Segmentation, range_starts) -> tuple[str, Optional[n
 
 def postprocess_ranges(seg: Segmentation, starts, ends,
                        hyphen_sentinel: bool = False) -> list[str]:
-    """postprocess_range over many contiguous ranges at once (the F8 span
+    """postprocess_text over many contiguous ranges at once (the F8 span
     texts): one global pass + a slice per range; with hyphen_sentinel,
     ranges containing \\x02 get the keep-hyphens replacement applied."""
     g_full, off = postprocess_global(seg, starts)
@@ -174,24 +139,21 @@ def plain_text_batch(seg: Segmentation, sort: bool = False,
     """Per-turn plain text, stripped — paginated_plain_text_output semantics
     (extraction.py:75-80: per page merge_text(...).strip()).
 
-    sort=False takes the batched path: per-line char bounds and all the
-    pass-skip flags come from vectorized gathers over ALL lines of the
-    batch, and the specials translate runs ONCE over the whole post-dedup
-    string through a 1:1-only table (spaces/line-breaks/tabs — every map
-    whose output is a single char, so indices stay aligned and a line is
-    a plain slice of the translated global). Only lines containing a
-    ligature (1→2/3 expansion), an in-line \\r\\n pair (2→1 collapse), or
-    a deleted control char — the length-changing constructs — is handled
-    by splicing those few positions into the global string and cumsum'ing
+    Per-line char bounds and all the pass-skip flags come from vectorized
+    gathers over ALL lines of the batch, and the specials translate runs
+    ONCE over the whole post-dedup string through a 1:1-only table
+    (spaces/line-breaks/tabs — every map whose output is a single char,
+    so indices stay aligned and a line is a plain slice of the
+    translated global). Only lines containing a ligature (1→2/3
+    expansion), an in-line \\r\\n pair (2→1 collapse), or a deleted
+    control char — the length-changing constructs — is handled by
+    splicing those few positions into the global string and cumsum'ing
     per-char output lengths into an offset map, so EVERY line is a plain
     slice. Measured 18 → 3.7 ms on the sf0.01 batch; output identical on
     both fixture tiers, the property suite, and adversarial
-    ligature/CRLF/control mixes. sort=True keeps the per-turn path:
-    block reorder is per turn anyway."""
-    if sort:
-        return [merge_text_turn(seg, t, sort, hyphens, sort_tolerance).strip()
-                for t in range(seg.n_turns)]
-
+    ligature/CRLF/control mixes. sort=True only changes which order each
+    turn's blocks are walked in (turn_block_orders); the line strings are
+    the same."""
     a_arr = seg.spans.start[seg.lines.start]
     z_arr = seg.spans.end[seg.lines.end - 1]
     # Boundary note: with collapse masked at line starts, a \r\n pair
@@ -211,11 +173,13 @@ def plain_text_batch(seg: Segmentation, sort: bool = False,
     tb_hi = seg.turn_block_hi.tolist()
     hy_l = ((seg.hy_cum[seg.turn_char_hi]
              - seg.hy_cum[seg.turn_char_lo]) > 0).tolist()
+    orders = turn_block_orders(seg, sort_tolerance) if sort else None
     out = []
     for t in range(seg.n_turns):
         parts = []
-        for b in range(tb_lo[t], tb_hi[t]):
-            # merge_text_turn builds "".join(line + "\n")·rstrip() + "\n\n".
+        for b in orders[t] if sort else range(tb_lo[t], tb_hi[t]):
+            # merge_text (postprocessing.py:95-113) builds
+            # "".join(line + "\n")·rstrip() + "\n\n" per block.
             # With every line already rstripped (ends non-whitespace or
             # empty), that equals "\n".join(lines).rstrip() + "\n\n": the
             # outer rstrip can only eat the final newline run left by

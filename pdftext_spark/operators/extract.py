@@ -16,9 +16,9 @@ Scale notes (the parts that must survive 1000 executors / 100 TB):
   side-table of link registrations — a few bytes per linked turn — and
   joined back with one broadcast join; the char payloads never shuffle
   again (operators/refs.py).
-- **Python boundary**: exactly one Arrow round-trip for the kernel (the
-  default links_via="persist" caches it); url/ref rewriting is a pure
-  JVM-side columnar projection over the cache.
+- **Python boundary**: exactly one Arrow round-trip for the kernel
+  (extract() caches it for the refs resolution); url/ref rewriting is a
+  pure JVM-side columnar projection over the cache.
 """
 
 from __future__ import annotations
@@ -26,13 +26,9 @@ from __future__ import annotations
 import re
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from pdftext_spark.config import ExtractConfig
 from pdftext_spark.operators.schema import EXTRACTED
-
-# sentinel: "use refs.DEFAULT_BROADCAST_THRESHOLD" (None means "no gate")
-_USE_DEFAULT = object()
 
 # Shuffle exchanges only — BroadcastExchange does NOT repartition the
 # probe side, so a broadcast-join input still deserves the salt.
@@ -69,63 +65,15 @@ def _arrow_kernel(cfg: ExtractConfig, target_schema):
     return run
 
 
-def link_registrations(transcripts: DataFrame, cfg: ExtractConfig) -> DataFrame:
-    """OPT-IN light pre-pass producing only (conv_id, turn_idx, link_dests)
-    for link-bearing turns (extract(links_via="prepass")). The `'"links"'`
-    substring filter is pushed into the parquet scan and selects a superset
-    of link-bearing payloads (~20% of rows here), so the X1 registry never
-    requires caching the heavy extraction output — at the price of decoding
-    link-bearing payloads twice (~15% of the struct pipeline). The default
-    path ("persist") runs the kernel once and caches it instead."""
-    import dataclasses
-
-    import pyarrow as pa
-
-    from pyspark.sql import types as T
-
-    light_cfg = dataclasses.replace(cfg, emit_struct=False, emit_tables=False,
-                                    emit_plain=False)
-    schema = T.StructType([
-        T.StructField("conv_id", T.StringType()),
-        T.StructField("turn_idx", T.IntegerType()),
-        T.StructField("link_dests", EXTRACTED["link_dests"].dataType),
-    ])
-    from pyspark.sql.pandas.types import to_arrow_schema
-    target = to_arrow_schema(schema)
-
-    def run(batches):
-        from pdftext_spark.core.arrow_out import link_dests_column
-        for _, col, rb in _routed(batches, light_cfg):
-            yield pa.RecordBatch.from_arrays(
-                [col("conv_id"), col("turn_idx"), link_dests_column(rb)],
-                schema=target)
-
-    cand = (transcripts.select("conv_id", "turn_idx", "role", "text")
-            .where(F.col("text").contains('"links"')
-                   & ~F.col("role").eqNullSafe("tool")))
-    # role filter: tool turns route to HTML extraction and can never
-    # register links — without it, tool HTML containing the substring
-    # "links" (class names, embedded JSON) would pay a full main-content
-    # scoring pass for output this pre-pass discards
-    return cand.mapInArrow(run, schema=schema)
-
-
 def _apply_salt(transcripts: DataFrame, cfg: ExtractConfig, spark) -> DataFrame:
     """Anti-skew salting of the kernel input, shared by every kernel
-    entry point (extract, plain_text_variants). Salting defeats
+    entry point (extract and the plain-text operators). Salting defeats
     conversation-clustered inputs (an Iceberg table bucketed by conv_id
     would put a mega-conversation in one task). When the scan already
     yields byte-balanced fine-grained splits — file sources split by
     size, so compute ∝ bytes is balanced by construction — the extra
     full-payload shuffle buys nothing; skip it."""
-    if cfg.salt not in ("auto", "always", "never"):
-        raise ValueError("ExtractConfig.salt must be 'auto', 'always' or "
-                         f"'never', got {cfg.salt!r}")
     n_parts = cfg.partitions or spark.sparkContext.defaultParallelism * 2
-    if cfg.salt == "never":
-        return transcripts
-    if cfg.salt == "always":
-        return transcripts.repartition(n_parts, "conv_id", "turn_idx")
     if _has_shuffle_exchange(
             transcripts._jdf.queryExecution().executedPlan().toString()):
         # The input already contains a shuffle (join/aggregate upstream):
@@ -152,36 +100,25 @@ def _apply_salt(transcripts: DataFrame, cfg: ExtractConfig, spark) -> DataFrame:
 
 
 def extract(transcripts: DataFrame, cfg: ExtractConfig = ExtractConfig(),
-            resolve_links: bool = True, links_via: str = "persist",
-            broadcast_threshold: "int | None | object" = _USE_DEFAULT) -> DataFrame:
+            resolve_links: bool = True) -> DataFrame:
     """Run the extraction kernel over a transcript table.
 
     Input columns: (conv_id, turn_idx, role, text, tool, ts) — the
     BASELINE.json input_hint contract.
 
-    links_via chooses how the X1 registry gets its link_dests side data:
-    - "persist" (default): ONE kernel pass, cached MEMORY_AND_DISK; the
-      registry aggregates the tiny cached link_dests column (columnar
-      cache prunes the heavy page column from that scan) and the rewrite
-      joins back against the same cache. The right trade on anything with
-      working storage — no payload is ever decoded twice.
-    - "prepass": no caching; a second, filtered light kernel pass over the
-      `'"links"'` superset supplies registrations (link_registrations).
-      For pipelines where caching the extracted output is off the table
-      and a ~15% decode tax is cheaper than the storage.
-
-    broadcast_threshold passes through to refs.resolve_refs: the default
-    gate counts link registrations EAGERLY at call time (one Spark job;
-    in persist mode it also materializes the kernel cache the first
-    consumer would have paid for anyway). At or below the threshold the
-    one per-turn refs side table is broadcast-hinted; above it the same
-    join runs unhinted and AQE picks broadcast or sort-merge. Pass None
-    for a fully lazy plan with an unconditionally hinted broadcast —
-    appropriate when composing plans for explain()/inspection or when
-    the corpus is known not to be link-dense."""
-    if links_via not in ("persist", "prepass"):
-        raise ValueError("links_via must be 'persist' or 'prepass', "
-                         f"got {links_via!r}")
+    With resolve_links (and links enabled), the X1 registry is built by
+    refs.resolve_refs from ONE kernel pass, cached MEMORY_AND_DISK: the
+    registry aggregates the tiny cached link_dests column (the columnar
+    cache prunes the heavy page column from that scan) and the rewrite
+    joins back against the same cache, so no payload is decoded twice.
+    Its broadcast-safety gate counts the link registrations EAGERLY at
+    call time (one Spark job, which also materializes the kernel cache
+    the first consumer would have paid for anyway). At or below
+    refs.DEFAULT_BROADCAST_THRESHOLD the one per-turn refs side table is
+    broadcast-hinted; above it the same join runs unhinted and AQE picks
+    broadcast or sort-merge. Callers that cannot cache the output run
+    resolve_links=False, stage it, and call resolve_refs(persist=False)
+    over the read-back (streaming/incremental.py)."""
     spark = transcripts.sparkSession
     # Catalyst cannot prune columns INTO the Python kernel, so project the
     # kernel's contract explicitly — extra input columns (e.g. `tool`)
@@ -192,19 +129,38 @@ def extract(transcripts: DataFrame, cfg: ExtractConfig = ExtractConfig(),
     target = to_arrow_schema(EXTRACTED)
     out = salted.mapInArrow(_arrow_kernel(cfg, target), schema=EXTRACTED)
     if resolve_links and not cfg.disable_links:
-        from pdftext_spark.operators.refs import (
-            DEFAULT_BROADCAST_THRESHOLD,
-            resolve_refs,
-        )
-        thr = (DEFAULT_BROADCAST_THRESHOLD
-               if broadcast_threshold is _USE_DEFAULT else broadcast_threshold)
-        if links_via == "prepass":
-            regs = link_registrations(transcripts, cfg)
-            out = resolve_refs(out, registrations=regs,
-                               broadcast_threshold=thr)
-        else:
-            out = resolve_refs(out, persist=True, broadcast_threshold=thr)
+        from pdftext_spark.operators.refs import resolve_refs
+        out = resolve_refs(out)
     return out
+
+
+def _text_operator(transcripts: DataFrame, cfg: ExtractConfig,
+                   text_columns: list[str], render) -> DataFrame:
+    """The shared body of the plain-text operators: one kernel pass over
+    the salted (conv_id, turn_idx, role, text) projection, emitting
+    (conv_id, turn_idx, *text_columns). render(rb) returns one per-row
+    string list per text column."""
+    import pyarrow as pa
+
+    from pyspark.sql import types as T
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    schema = T.StructType(
+        [T.StructField("conv_id", T.StringType()),
+         T.StructField("turn_idx", T.IntegerType())]
+        + [T.StructField(c, T.StringType()) for c in text_columns])
+    target = to_arrow_schema(schema)
+
+    def run(batches):
+        for _, col, rb in _routed(batches, cfg):
+            yield pa.RecordBatch.from_arrays(
+                [col("conv_id"), col("turn_idx")]
+                + [pa.array(texts, type=pa.string()) for texts in render(rb)],
+                schema=target)
+
+    pruned = transcripts.select("conv_id", "turn_idx", "role", "text")
+    salted = _apply_salt(pruned, cfg, transcripts.sparkSession)
+    return salted.mapInArrow(run, schema=schema)
 
 
 def plain_text_variants(transcripts: DataFrame,
@@ -222,10 +178,6 @@ def plain_text_variants(transcripts: DataFrame,
     HTML/tool turns have no layout, so all three columns agree there."""
     import dataclasses
 
-    import pyarrow as pa
-
-    from pyspark.sql import types as T
-
     # sort/hyphens reset explicitly: the three output columns are
     # DEFINED as (default render, sorted, keep-hyphens) regardless of
     # the caller's flags — without the reset, cfg.sort=True would make
@@ -233,34 +185,18 @@ def plain_text_variants(transcripts: DataFrame,
     cfg = dataclasses.replace(cfg, emit_struct=False, emit_tables=False,
                               disable_links=True, emit_plain=True,
                               sort=False, hyphens=False)
-    schema = T.StructType([
-        T.StructField("conv_id", T.StringType()),
-        T.StructField("turn_idx", T.IntegerType()),
-        T.StructField("text", T.StringType()),
-        T.StructField("text_sorted", T.StringType()),
-        T.StructField("text_keephyphens", T.StringType()),
-    ])
-    from pyspark.sql.pandas.types import to_arrow_schema
-    target = to_arrow_schema(schema)
 
-    def run(batches):
+    def render(rb):
         from pdftext_spark.core.assemble import plain_text_batch
-        for _, col, rb in _routed(batches, cfg):
-            srt = hyp = []  # no doc turns without a segmentation
-            if rb.seg is not None:
-                srt = plain_text_batch(rb.seg, sort=True,
-                                       sort_tolerance=cfg.sort_tolerance)
-                hyp = plain_text_batch(rb.seg, hyphens=True)
-            yield pa.RecordBatch.from_arrays(
-                [col("conv_id"), col("turn_idx"),
-                 pa.array(rb.row_texts(), type=pa.string()),
-                 pa.array(rb.row_texts(srt), type=pa.string()),
-                 pa.array(rb.row_texts(hyp), type=pa.string())],
-                schema=target)
+        srt = hyp = []  # no doc turns without a segmentation
+        if rb.seg is not None:
+            srt = plain_text_batch(rb.seg, sort=True,
+                                   sort_tolerance=cfg.sort_tolerance)
+            hyp = plain_text_batch(rb.seg, hyphens=True)
+        return [rb.row_texts(), rb.row_texts(srt), rb.row_texts(hyp)]
 
-    pruned = transcripts.select("conv_id", "turn_idx", "role", "text")
-    salted = _apply_salt(pruned, cfg, transcripts.sparkSession)
-    return salted.mapInArrow(run, schema=schema)
+    return _text_operator(transcripts, cfg,
+                          ["text", "text_sorted", "text_keephyphens"], render)
 
 
 def plain_text(transcripts: DataFrame, cfg: ExtractConfig = ExtractConfig()) -> DataFrame:
@@ -274,27 +210,7 @@ def plain_text(transcripts: DataFrame, cfg: ExtractConfig = ExtractConfig()) -> 
     them, paying per-row Arrow work on both sides of the boundary."""
     import dataclasses
 
-    import pyarrow as pa
-
-    from pyspark.sql import types as T
-
     cfg = dataclasses.replace(cfg, emit_struct=False, emit_tables=False,
                               disable_links=True, emit_plain=True)
-    schema = T.StructType([
-        T.StructField("conv_id", T.StringType()),
-        T.StructField("turn_idx", T.IntegerType()),
-        T.StructField("text", T.StringType()),
-    ])
-    from pyspark.sql.pandas.types import to_arrow_schema
-    target = to_arrow_schema(schema)
-
-    def run(batches):
-        for _, col, rb in _routed(batches, cfg):
-            yield pa.RecordBatch.from_arrays(
-                [col("conv_id"), col("turn_idx"),
-                 pa.array(rb.row_texts(), type=pa.string())],
-                schema=target)
-
-    pruned = transcripts.select("conv_id", "turn_idx", "role", "text")
-    salted = _apply_salt(pruned, cfg, transcripts.sparkSession)
-    return salted.mapInArrow(run, schema=schema)
+    return _text_operator(transcripts, cfg, ["text"],
+                          lambda rb: [rb.row_texts()])

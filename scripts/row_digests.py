@@ -2,9 +2,10 @@
 """Per-row digests of the extraction operators' output, to show that a
 refactor leaves every output row bit-identical. Digests are
 xxhash64(to_json(struct(*columns))) keyed by "conv_id/turn_idx", for
-extract() on the default join path, the unhinted one
-(broadcast_threshold=0) and links_via="prepass", and for plain_text()
-and plain_text_variants(). Run it once from each checkout, then compare:
+extract() on the default join path, for the unhinted refs join
+(resolve_refs with broadcast_threshold=0), for extract() with the
+reading-order sort (ExtractConfig(sort=True)), and for plain_text() and
+plain_text_variants(). Run it once from each checkout, then compare:
 
     python scripts/row_digests.py OUT.json TRANSCRIPTS.parquet [...]
     python scripts/row_digests.py --compare A.json B.json
@@ -18,27 +19,40 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-# mode -> (operators.extract function, keyword arguments)
-MODES = {"default": ("extract", {}),
-         "threshold0": ("extract", {"broadcast_threshold": 0}),
-         "prepass": ("extract", {"links_via": "prepass"}),
-         "plain": ("plain_text", {}),
-         "variants": ("plain_text_variants", {})}
+
+MODES = ("default", "threshold0", "plain", "variants", "sorted")
+
+
+def _runners() -> dict:
+    """mode -> function from a transcripts DataFrame to the output."""
+    from pdftext_spark.config import ExtractConfig
+    from pdftext_spark.operators.extract import (
+        extract,
+        plain_text,
+        plain_text_variants,
+    )
+    from pdftext_spark.operators.refs import resolve_refs
+
+    return {"default": extract,
+            "threshold0": lambda df: resolve_refs(
+                extract(df, resolve_links=False), broadcast_threshold=0),
+            "plain": plain_text,
+            "variants": plain_text_variants,
+            "sorted": lambda df: extract(df, ExtractConfig(sort=True))}
 
 
 def digests(paths: list[str]) -> dict:
     from pyspark.sql import functions as F
 
-    from pdftext_spark.operators import extract as ops
     from pdftext_spark.sources.session import build_session
 
     spark = build_session(app="row-digests")
     out: dict = {}
     try:
         for path in paths:
-            for mode, (fn, kw) in MODES.items():
+            for mode, run in _runners().items():
                 spark.catalog.clearCache()
-                df = getattr(ops, fn)(spark.read.parquet(path), **kw)
+                df = run(spark.read.parquet(path))
                 row = F.xxhash64(F.to_json(F.struct(*df.columns)))
                 rows = df.select("conv_id", "turn_idx",
                                  row.alias("h")).collect()

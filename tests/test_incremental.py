@@ -2,9 +2,12 @@
 
 import os
 
+from pyspark.sql import functions as F
+
 from pdftext_spark.config import ExtractConfig
 from pdftext_spark.metrics import corpus_metrics, partition_metrics
 from pdftext_spark.operators.extract import extract
+from pdftext_spark.operators.schema import EXTRACTED
 from pdftext_spark.streaming.incremental import (
     read_manifest,
     read_output,
@@ -13,9 +16,12 @@ from pdftext_spark.streaming.incremental import (
 
 
 def _collect_sorted(df):
+    """(conv_id, turn_idx, JSON of every EXTRACTED column) per row, so a
+    resumed run must equal the one-shot run byte for byte."""
     return sorted(
-        (r["conv_id"], r["turn_idx"], r["text"], r["error"]) for r in
-        df.select("conv_id", "turn_idx", "text", "error").collect())
+        tuple(r) for r in df.select(
+            "conv_id", "turn_idx",
+            F.to_json(F.struct(*EXTRACTED.names))).collect())
 
 
 def test_resume_equals_clean_run(spark, transcripts, fixture_dir, tmp_path):

@@ -1,4 +1,4 @@
-"""Round-4 regression tests: the four ADVICE fixes (null-role prepass,
+"""Round-4 regression tests: the four ADVICE fixes (null-role link routing,
 shuffle-exchange salt probe, HTML unquoted-value self-close, font-key
 docstring) plus new round-4 operators as they land."""
 
@@ -9,7 +9,7 @@ from pyspark.sql import functions as F
 
 from pdftext_spark.config import ExtractConfig
 from pdftext_spark.core.html_main import _build_tree, _self_close, extract_main_text
-from pdftext_spark.operators.extract import _has_shuffle_exchange, link_registrations
+from pdftext_spark.operators.extract import _has_shuffle_exchange, extract
 
 
 # ---------------------------------------------------------------- html
@@ -300,12 +300,12 @@ def test_curate_corpus_perplexity_gate(spark):
     assert got < ungated  # the gate dropped at least one kept doc
 
 
-# ------------------------------------------------------------- prepass
+# ------------------------------------------------------- null-role links
 
 def test_null_role_turn_reaches_prepass(spark):
-    """A NULL-role turn routes to the PDF path and can register links;
-    the prepass candidate filter must not drop it (three-valued logic on
-    role != 'tool')."""
+    """A NULL-role turn is not a tool turn (three-valued logic on
+    role != 'tool' must not drop it): it routes to the PDF path,
+    registers its link and ends with the link resolved."""
     payload = {
         "kind": "chars",
         "page_bbox": [0.0, 0.0, 612.0, 792.0],
@@ -323,9 +323,12 @@ def test_null_role_turn_reaches_prepass(spark):
     df = spark.createDataFrame(
         rows, "conv_id string, turn_idx int, role string, text string, "
               "tool string, ts timestamp")
-    regs = link_registrations(df, ExtractConfig()).collect()
-    assert len(regs) == 1 and regs[0]["turn_idx"] == 0
-    assert len(regs[0]["link_dests"]) == 1
+    (row,) = extract(df, ExtractConfig()).collect()
+    assert not row["is_html"] and row["error"] is None
+    assert len(row["link_dests"]) == 1
+    urls = [s["url"] for b in row["page"]["blocks"] for ln in b["lines"]
+            for s in ln["spans"] if s["url"]]
+    assert urls == ["#page-0-0"]
 
 
 # ---------------------------------------------------------- salt probe
@@ -347,7 +350,6 @@ def test_broadcast_join_input_still_salted(spark):
     """An input whose only exchange is a BroadcastExchange is a pure-scan
     pipeline for salting purposes: the probe side keeps its (possibly
     coarse) partitioning, so the salt must still engage."""
-    from pdftext_spark.operators.extract import extract
     big = spark.createDataFrame(
         [("c%d" % i, 0, "user", "plain words", None, None) for i in range(64)],
         "conv_id string, turn_idx int, role string, text string, "
@@ -369,7 +371,6 @@ def test_shuffle_upstream_skips_salt(spark):
     shuffle-partition-wide: the salt must NOT add a second full-payload
     exchange. sparkPlan never contains EnsureRequirements exchanges, so
     this branch only works off executedPlan (r4 fix)."""
-    from pdftext_spark.operators.extract import extract
     base = spark.createDataFrame(
         [("c%d" % i, i % 3, "user", "plain words", None, None)
          for i in range(32)],

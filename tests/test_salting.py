@@ -1,9 +1,7 @@
 """Skew handling: the anti-skew salt engages exactly when it should."""
 
-import pytest
-
 from pdftext_spark.config import ExtractConfig
-from pdftext_spark.operators.extract import extract, plain_text
+from pdftext_spark.operators.extract import extract
 
 
 def _plan(df):
@@ -27,24 +25,6 @@ def test_salt_skipped_for_fine_input(spark, transcripts):
     # hash repartition on (conv_id, turn_idx) feeds the kernel
     assert "hashpartitioning(conv_id, turn_idx" not in plan.replace("#", " ") \
         or plan.count("REPARTITION_BY_NUM") == 1
-
-
-def test_salt_never_trusts_source(spark, transcripts):
-    plan = _plan(extract(transcripts.coalesce(1), ExtractConfig(salt="never"),
-                         resolve_links=False))
-    assert "REPARTITION_BY_NUM" not in plan
-
-
-def test_salt_always_forces_shuffle(spark, transcripts):
-    plan = _plan(extract(transcripts.repartition(64),
-                         ExtractConfig(salt="always"), resolve_links=False))
-    assert "hashpartitioning(conv_id" in plan
-
-
-def test_unknown_salt_mode_fails_loudly(spark, transcripts):
-    """A typo in ExtractConfig.salt must not silently run as "auto"."""
-    with pytest.raises(ValueError, match="'auto', 'always' or 'never'"):
-        plain_text(transcripts, ExtractConfig(salt="alwyas"))
 
 
 def test_skew_report_multi_key(spark):
